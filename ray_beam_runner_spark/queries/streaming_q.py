@@ -659,7 +659,8 @@ def _sq_oracle(alpha: float, qs: list[float]) -> str:
       SELECT w_start, q, bucket FROM cum CROSS JOIN qs
       WHERE c >= floor(1 + q * (n - 1)) AND c - cnt < floor(1 + q * (n - 1)))
     SELECT w_start, q,
-           round(2 * power({repr(g)}, bucket) / {g1}, 6) AS est
+           CASE WHEN bucket = -1000000000 THEN 0.0
+                ELSE round(2 * power({repr(g)}, bucket) / {g1}, 6) END AS est
     FROM hit
     """
 

@@ -38,9 +38,11 @@ pipeline needs for incremental corpus maintenance.
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import re
+import shutil
 import time
 import uuid
 
@@ -189,6 +191,21 @@ def _fuse_scan_ok(
         if total > _FUSE_MAX_BYTES:
             return False
     return True
+
+
+def _observed(obs: Observation, name: str):
+    """Metric ``name`` of ``obs`` once its action has delivered it,
+    else None. Bounded: the JVM ``getRowOrEmpty`` waits at most ~100 ms
+    where ``Observation.get`` would block forever on metrics that never
+    arrive; a row without a schema (the observed subtree was pruned out
+    of the executed plan) reads as absent too."""
+    try:
+        row = obs._jo.getRowOrEmpty()  # noqa: SLF001
+        if row.isEmpty() or row.get().schema() is None:
+            return None
+        return obs.get[name]
+    except Exception:  # noqa: BLE001 - an unreadable row takes the fallback
+        return None
 
 
 def _read_shard_cols(table_dir: str, shards: list[dict], kind: str, columns: list[str]):
@@ -411,6 +428,40 @@ class _CarriedBlooms:
 
 class ConcurrentCommitError(RuntimeError):
     """Another writer published this version first (optimistic-concurrency loss)."""
+
+
+def _with_retries(retries: int, run):
+    """Call ``run()`` until it commits, re-running it on each lost
+    publish race (Delta's optimistic commit loop); ConcurrentCommitError
+    escapes after ``retries`` lost races."""
+    for attempt in range(retries + 1):
+        try:
+            return run()
+        except ConcurrentCommitError:
+            if attempt == retries:
+                raise
+    raise AssertionError("unreachable")
+
+
+def _txn_guard(txn_app: str | None, txn_version: int | None) -> None:
+    if (txn_app is None) != (txn_version is None):
+        raise ValueError(
+            "txn_app and txn_version must be passed together: storing a "
+            "None watermark would wedge every later merge for that app"
+        )
+
+
+def _txns_for(manifest: dict, txn_app: str | None, txn_version: int | None):
+    """The txn watermarks a commit on ``manifest`` records: the
+    manifest's own plus ``txn_app``'s — or None when ``(txn_app,
+    txn_version)`` was already applied (a replay, which callers turn
+    into a no-op returning the current version)."""
+    txns = dict(manifest.get("txns", {}))
+    if txn_app is not None:
+        if txns.get(txn_app, -1) >= txn_version:
+            return None
+        txns[txn_app] = int(txn_version)
+    return txns
 
 
 def _manifest_path(table_dir: str, version: int) -> str:
@@ -837,6 +888,25 @@ def _file_stat(manifest: dict, events: list[tuple], rel: str, col: str):
     return s.get(_phys_name(events, rel, col) if events else col)
 
 
+def _range_candidates(manifest: dict, rels: list[str], key_range) -> list[str]:
+    """The files of ``rels`` whose recorded [min, max] of the
+    ``key_range=(col, lo, hi)`` column can intersect [lo, hi]; files
+    without stats for ``col`` always stay. All of ``rels`` when
+    ``key_range`` is None."""
+    if key_range is None:
+        return list(rels)
+    col, lo, hi = key_range
+    events = _mapping_events(manifest)
+
+    def _keep(rel: str) -> bool:
+        s = _file_stat(manifest, events, rel, col)
+        if not s or s[0] is None or s[1] is None:
+            return True
+        return not (s[1] < lo or s[0] > hi)
+
+    return [rel for rel in rels if _keep(rel)]
+
+
 class _SnapReader:
     """Manifest-pinned parquet reader, column-mapping aware.
 
@@ -908,6 +978,15 @@ class _SnapReader:
             out = out.unionByName(df)
         return out
 
+    def live(self, rels: list[str], keep_meta: bool = False) -> DataFrame:
+        """The live rows of ``rels``: the pinned scan with the
+        manifest's deletion vectors anti-applied (:func:`_apply_dvs`);
+        ``keep_meta`` keeps the ``_meta_file``/``_meta_pos`` columns."""
+        df = self.parquet(
+            *(os.path.join(self._tdir, rel) for rel in rels), with_meta=True
+        )
+        return _apply_dvs(self._spark, df, self._m, self._tdir, rels, keep_meta)
+
 
 def _manifest_reader(spark: SparkSession, manifest: dict, table_dir: str) -> _SnapReader:
     """Parquet reader pinned to the manifest's recorded schema (and its
@@ -946,10 +1025,12 @@ def _rel_of(uri_path: str, rel_files: list[str], table_dir: str) -> str | None:
 
 
 def _write_data_files(
-    df: DataFrame, table_dir: str, stats_for: list[str] | None = None
+    df: DataFrame, table_dir: str, stats_for: list[str] | None = None,
+    commit: str | None = None,
 ) -> tuple[list[str], dict[str, dict], dict[str, int]]:
-    """Write df as immutable parquet files under a fresh commit dir;
-    return (table-relative paths, per-file stats). Executors stream
+    """Write df as immutable parquet files under a fresh commit dir
+    (``commit``, table-relative, when the caller must know it); return
+    (table-relative paths, per-file stats). Executors stream
     rows straight to the files. Stats are the manifest-level pruning
     index Iceberg keeps in its manifests: MERGE uses them to skip files
     whose key range cannot contain an update. Every file additionally
@@ -971,7 +1052,7 @@ def _write_data_files(
     original one-job Spark aggregate so recorded values stay identical
     in every case."""
     df = df.drop("_meta_file", "_meta_pos")
-    commit = os.path.join(_DATA_DIR, f"commit-{uuid.uuid4().hex}")
+    commit = commit or os.path.join(_DATA_DIR, f"commit-{uuid.uuid4().hex}")
     out_dir = os.path.join(table_dir, commit)
     df.write.mode("errorifexists").parquet(out_dir)
     rel_files = [
@@ -1568,17 +1649,7 @@ def read_snapshot(
             raise FileNotFoundError(f"no snapshots in {table_dir}")
     manifest = read_manifest(table_dir, version)
     events = _mapping_events(manifest)
-    rel_files = manifest["files"]
-    if key_range is not None:
-        col, lo, hi = key_range
-
-        def _keep(rel: str) -> bool:
-            s = _file_stat(manifest, events, rel, col)
-            if not s or s[0] is None or s[1] is None:
-                return True
-            return not (s[1] < lo or s[0] > hi)
-
-        rel_files = [rel for rel in rel_files if _keep(rel)]
+    rel_files = _range_candidates(manifest, manifest["files"], key_range)
     if point is not None:
         pcol, pval = point
         if pval is not None:
@@ -1721,8 +1792,7 @@ def read_snapshot(
     # (mergeSchema) regardless of the legacy ``merge_schema`` flag.
     reader = _manifest_reader(spark, manifest, table_dir)
     struct = _schema_struct(manifest)
-    paths = [os.path.join(table_dir, rel) for rel in rel_files]
-    if not paths:
+    if not rel_files:
         if struct is not None:
             # legitimately empty table (or every file stats-pruned):
             # empty DataFrame with the recorded schema
@@ -1732,9 +1802,7 @@ def read_snapshot(
             all_paths = [os.path.join(table_dir, r) for r in manifest["files"]]
             return reader.parquet(*all_paths).limit(0)
         raise FileNotFoundError(f"snapshot v{version} of {table_dir} is empty")
-    df = _apply_dvs(
-        spark, reader.parquet(*paths, with_meta=True), manifest, table_dir, rel_files
-    )
+    df = reader.live(rel_files)
     if key_range is not None:
         col, lo, hi = key_range
         df = df.filter((F.col(col) >= F.lit(lo)) & (F.col(col) <= F.lit(hi)))
@@ -1771,9 +1839,10 @@ def upsert_snapshot(
     transaction-id check re-runs per attempt, keeping idempotent
     writers idempotent even when the racer was the same application.
     Raises ConcurrentCommitError after ``retries`` lost races. See
-    :func:`_upsert_once` for the merge algorithm itself.
+    :func:`_upsert_once` for the merge itself and
+    :func:`_rewrite_commit` for the commit it runs.
 
-    ``dv=True`` switches phase 3 to MERGE-ON-READ (Delta's DV write
+    ``dv=True`` switches the rewrite to MERGE-ON-READ (Delta's DV write
     path): matched pre-image rows are tombstoned via a (file, row
     position) sidecar and the update batch is APPENDED as new files —
     zero data files rewritten, so a narrow update of a wide file costs
@@ -1791,27 +1860,22 @@ def upsert_snapshot(
     blindly re-running the merge against a newer manifest would
     republish stale post-images over the racer's changes; such callers
     must recompute from the new snapshot and call again."""
+    _txn_guard(txn_app, txn_version)
     if expected_parent is not None:
         # the inputs are only valid against expected_parent: internal
         # retries against a newer manifest are exactly the stale-RMW
         # hazard the pin exists to prevent
         retries = 0
-    for attempt in range(retries + 1):
-        try:
-            return _upsert_once(
-                spark, table_dir, updates, keys, txn_app, txn_version,
-                evolve_schema, cdc, dv, delete_keys_df, expected_parent,
-            )
-        except ConcurrentCommitError:
-            if attempt == retries:
-                raise
-    raise AssertionError("unreachable")
+    return _with_retries(retries, lambda: _upsert_once(
+        spark, table_dir, updates, keys, txn_app, txn_version,
+        evolve_schema, cdc, dv, delete_keys_df, expected_parent,
+    ))
 
 
 def _upsert_once(
     spark: SparkSession,
     table_dir: str,
-    updates: DataFrame,
+    updates: DataFrame | None,
     keys: list[str],
     txn_app: str | None = None,
     txn_version: int | None = None,
@@ -1823,25 +1887,27 @@ def _upsert_once(
 ) -> int:
     """Keyed MERGE into a snapshot table: matching keys replaced, new
     keys appended, untouched rows survive — published as one atomic
-    snapshot.
+    snapshot. ``updates=None`` is the keyed DELETE of
+    :func:`delete_keys`: the keys of ``delete_keys_df`` are removed and
+    nothing is re-added.
 
     Two-level file pruning, Iceberg-style:
 
     1. MANIFEST STATS (no data read): when the table was written with
        ``cluster_by``/``stats_for``, each file's manifest entry carries
        the key column's [min, max]; files whose range cannot contain
-       any update key are skipped outright — a broadcast range join
-       against the distinct update keys, update keys never on the
-       driver. On a clustered table this reduces the scan from "whole
-       table" to "files overlapping the update key range".
-    2. EXACT DETECTION: the surviving candidates get one
-       ``_metadata.file_path`` semi-join to find files truly containing
-       a matching key. Only the file LIST (not rows) is collected; only
-       those files are re-read, anti-joined, and rewritten together
-       with the updates (re-clustered, stats recorded, so pruning keeps
-       working across merge generations). Every other file is carried
-       into the new manifest verbatim — rewrite cost is proportional to
-       the files actually hit, exactly Delta/Iceberg MERGE behavior.
+       any update key are skipped outright (:func:`_merge_phases`),
+       update keys never on the driver. On a clustered table this
+       reduces the scan from "whole table" to "files overlapping the
+       update key range".
+    2. EXACT DETECTION: a ``_metadata.file_path`` semi-join of the
+       surviving candidates against the update keys finds the files
+       truly containing a matching key; only those are anti-joined and
+       rewritten together with the updates (re-clustered, stats
+       recorded, so pruning keeps working across merge generations).
+       Every other file is carried into the new manifest verbatim —
+       rewrite cost is proportional to the files actually hit, exactly
+       Delta/Iceberg MERGE behavior (:func:`_rewrite_commit`).
 
     Updates must carry at most one row per key (last-writer-wins dedup
     is the caller's policy).
@@ -1854,11 +1920,6 @@ def _upsert_once(
     exactly-once — a micro-batch retried after a crash re-arrives with
     the same epoch id and is skipped.
     """
-    if (txn_app is None) != (txn_version is None):
-        raise ValueError(
-            "txn_app and txn_version must be passed together: storing a "
-            "None watermark would wedge every later merge for that app"
-        )
     base = latest_version(table_dir)
     if expected_parent is not None and base != expected_parent:
         raise ConcurrentCommitError(
@@ -1866,6 +1927,8 @@ def _upsert_once(
             f"computed against v{expected_parent}"
         )
     if base is None:
+        if updates is None:
+            raise FileNotFoundError(f"no snapshots in {table_dir}")
         if txn_app is not None:
             files, stats, rows_map = _write_data_files(updates, table_dir)
             manifest = {
@@ -1882,36 +1945,61 @@ def _upsert_once(
             return 1
         return write_snapshot(updates, table_dir)
     manifest = read_manifest(table_dir, base)
-    txns: dict = dict(manifest.get("txns", {}))
-    if txn_app is not None and txns.get(txn_app, -1) >= txn_version:
+    txns = _txns_for(manifest, txn_app, txn_version)
+    if txns is None:
         return base  # replayed transaction: already applied, no-op
-    if txn_app is not None:
-        txns[txn_app] = int(txn_version)
-    rel_files = manifest["files"]
-    file_stats: dict[str, dict] = manifest.get("file_stats", {})
+    fields = sorted(manifest.get("schema") or ())
+    if updates is not None:
+        fields = _check_merge_batch(spark, table_dir, manifest, updates, evolve_schema)
 
-    # Schema guard: without evolve_schema, a batch whose columns differ
-    # from the table's is an error — otherwise a no-touch append would
-    # silently commit mixed-schema files that a plain read mis-reads.
-    # The table's LOGICAL schema lives in the manifest (recorded at
-    # every commit); after an evolving merge the manifest holds
-    # mixed-generation files, so no single file's footer is
-    # authoritative. Manifests predating schema recording fall back to
-    # the mergeSchema union over live files (footer reads only).
+    # Persisted: each phase's action (phase-1 flag aggregate, rewrite
+    # write, CDC sidecar write) would otherwise re-evaluate the whole
+    # updates lineage — 3x the upstream cost per merge, 3x the dedupe
+    # window per streaming micro-batch.
+    if cdc and updates is not None:
+        # the CDC sidecar write is a second action over the updates
+        # lineage (the rewrite is the first)
+        updates = updates.persist()
+    key_set = functools.reduce(
+        lambda a, b: a.unionByName(b),
+        [df.select(*keys) for df in (updates, delete_keys_df) if df is not None],
+    ).distinct().persist()
+    try:
+        return _merge_phases(
+            spark, table_dir, updates, keys, key_set, base, manifest, txns,
+            fields, evolve_schema, cdc, dv,
+        )
+    finally:
+        key_set.unpersist()
+        if cdc and updates is not None:
+            updates.unpersist()
+
+
+def _check_merge_batch(spark, table_dir, manifest, updates, evolve_schema) -> list[str]:
+    """Validate a MERGE batch against the table before any phase runs
+    and return the committed schema's sorted field names.
+
+    Schema guard: without evolve_schema, a batch whose columns differ
+    from the table's is an error — otherwise a no-touch append would
+    silently commit mixed-schema files that a plain read mis-reads.
+    The table's LOGICAL schema lives in the manifest (recorded at every
+    commit); after an evolving merge the manifest holds mixed-generation
+    files, so no single file's footer is authoritative. Manifests
+    predating schema recording fall back to the mergeSchema union over
+    live files (footer reads only)."""
     tbl_fields = set(
         manifest.get("schema")
         or (
             f.name
             for f in spark.read.option("mergeSchema", "true")
-            .parquet(*(os.path.join(table_dir, rel) for rel in rel_files))
+            .parquet(*(os.path.join(table_dir, rel) for rel in manifest["files"]))
             .schema.fields
         )
     )
     upd_fields = {f.name for f in updates.schema.fields}
-    # CHECK constraints: validate the batch BEFORE any phase runs. An
-    # evolve_schema batch null-backfills columns it dropped first, so a
-    # constraint on an absent column sees NULL (passes, per SQL CHECK)
-    # instead of failing analysis.
+    # CHECK constraints: an evolve_schema batch null-backfills columns it
+    # dropped first, so a constraint on an absent column sees NULL
+    # (passes, per SQL CHECK) instead of failing analysis.
     cons = manifest.get("constraints")
     if cons:
         val_df = updates
@@ -1932,48 +2020,21 @@ def _upsert_once(
             f"update schema {sorted(upd_fields)} != table schema "
             f"{sorted(tbl_fields)}; pass evolve_schema=True to merge schemas"
         )
-    _struct0 = _schema_struct(manifest)
-    if _struct0 is not None:  # pre-schema manifests: legacy, unchecked
-        _check_merge_types(_struct0, updates.schema, evolve_schema)
-
-    # Phase 1 — manifest-stats pruning (no data read at all): a file
-    # whose recorded [min, max] range of the first key column cannot
-    # contain any update key is no candidate. The range check runs in
-    # Spark (update keys never land on the driver): broadcast the small
-    # (file, lo, hi) table against the distinct update keys. Files
-    # without stats are always candidates.
-    # Persisted: each phase's action (range-join collect, semi-join
-    # collect, anti-join write) would otherwise re-evaluate the whole
-    # updates lineage — 3x the upstream cost per merge, 3x the dedupe
-    # window per streaming micro-batch.
-    if cdc:
-        # the CDC sidecar write is a second action over the updates
-        # lineage (phase 3's rewrite is the first) — persist it for the
-        # merge duration, same rationale as key_set below
-        updates = updates.persist()
-    key_set = updates.select(*keys).distinct()
-    if delete_keys_df is not None:
-        # the anti-join drops these keys' rows like any matched key,
-        # but no replacement re-adds them: WHEN MATCHED ... DELETE in
-        # the same atomic commit as the updates
-        key_set = key_set.unionByName(delete_keys_df.select(*keys)).distinct()
-    key_set = key_set.persist()
-    try:
-        return _merge_phases(
-            spark, table_dir, updates, keys, key_set, base, manifest, rel_files,
-            file_stats, txns, tbl_fields, upd_fields, evolve_schema, cdc, dv,
-        )
-    finally:
-        key_set.unpersist()
-        if cdc:
-            updates.unpersist()
+    struct0 = _schema_struct(manifest)
+    if struct0 is not None:  # pre-schema manifests: legacy, unchecked
+        _check_merge_types(struct0, updates.schema, evolve_schema)
+    return sorted(tbl_fields | upd_fields if evolve_schema else tbl_fields)
 
 
 def _merge_phases(
-    spark, table_dir, updates, keys, key_set, base, manifest, rel_files,
-    file_stats, txns, tbl_fields, upd_fields, evolve_schema, cdc, dv=False,
+    spark, table_dir, updates, keys, key_set, base, manifest, txns,
+    fields, evolve_schema, cdc, dv=False,
 ):
+    """MERGE's row-level parts for :func:`_rewrite_commit` (or the DV
+    write path): the phase-1 candidate step, the key-set semi-join
+    match, and the anti-join transform of touched files' rows."""
     k0 = keys[0]
+    rel_files = manifest["files"]
     events = _mapping_events(manifest)
     ranged = []
     for rel in rel_files:
@@ -2016,7 +2077,6 @@ def _merge_phases(
             .collect()
         )
         candidates += [r._path for r in hit]
-    pruned_by_stats = len(rel_files) - len(candidates)
 
     if dv:
         foreign = [rel for rel in rel_files if os.path.isabs(rel)]
@@ -2030,285 +2090,226 @@ def _merge_phases(
                 "first (materializes the clone), then DV mode works"
             )
         return _merge_dv(
-            spark, table_dir, updates, keys, key_set, base, manifest,
-            rel_files, file_stats, txns, tbl_fields, upd_fields,
-            evolve_schema, cdc, candidates, pruned_by_stats,
+            spark, table_dir, updates, keys, key_set, base, manifest, txns,
+            fields, evolve_schema, cdc, candidates,
         )
 
-    # Phases 2+3 FUSED into one action (guide §1.2/§5.3): the rewrite
-    # job's plan carries BOTH the exact touched-file detection (the
-    # candidates' key columns semi-joined to the update keys — the same
-    # column-pruned scan the old dedicated detection job ran) and the
-    # rewrite itself: candidate rows are kept iff their file contains a
-    # matching key (semi-join against the broadcast detection frame)
-    # and their own key does not match (anti-join), then unioned with
-    # the updates and written. The touched-file LIST — needed for the
-    # manifest's rewrote / untouched bookkeeping and the CDC pre-image
-    # scan — rides out of the same job through an Observation
-    # (CollectMetrics) on the detection branch, so the merge pays ONE
-    # driver action instead of a detection collect followed by a
-    # rewrite write. Rows from untouched candidate files are scanned
-    # and dropped by the semi-join (the old dedicated detection scanned
-    # their key columns instead) — on a range-clustered table
-    # candidates track touched files closely, so the extra full-row
-    # scan is change-proportional, never table-proportional. The reader
-    # is pinned to the manifest's recorded schema: on a
-    # mixed-generation table (after a past evolve_schema merge) plain
-    # spark.read would sample an arbitrary file's footer and could miss
-    # the evolved column, making the unionByName below fail or
-    # null-backfill non-deterministically.
-    touched_rel: set[str] = set()
-    reader = _manifest_reader(spark, manifest, table_dir)
-    stats_for = None
-    if file_stats:
-        stats_for = _stats_cols(manifest)
-
-    def _delete_noop() -> int:
-        # keyed DELETE matching nothing: metadata no-op unless a txn
-        # watermark must be recorded (clean manifest — carrying the
-        # parent's cdc_files would re-emit its deltas in the feed)
-        if txns == manifest.get("txns", {}):
-            return base
-        noop = {
-            "version": base + 1,
-            "parent": base,
-            "files": list(rel_files),
-            "op": "delete",
-            "rewrote": [],
-            "pruned_by_stats": pruned_by_stats,
-            "schema": manifest.get("schema"),
-            "schema_json": manifest.get("schema_json"),
-            "txns": txns,
-        }
-        for key in ("file_stats", "file_rows", "bloom_conf", "file_blooms", "bloom_types", "file_dvs", "constraints", "renames", "dropped"):
-            if manifest.get(key):
-                noop[key] = manifest[key]
-        _publish(table_dir, base + 1, noop)
-        return base + 1
-
-    obs = None
-    if candidates:
-        cand_df = _apply_dvs(
-            spark,
-            reader.parquet(
-                *(os.path.join(table_dir, rel) for rel in candidates),
-                with_meta=True,
-            ),
-            manifest,
-            table_dir,
-            candidates,
-            keep_meta=True,
-        )
-        if _fuse_scan_ok(table_dir, manifest, candidates, bool(file_stats)):
-            det = (
-                cand_df.select(*keys, "_meta_file")
-                .join(key_set, keys, "left_semi")
-                .select("_meta_file")
-                .distinct()
-            )
-            # Sentinel row: when the detection comes up EMPTY (a pure
-            # append), AQE's empty-relation propagation would prune the
-            # whole observed subtree out of the broadcast build and the
-            # metrics would never be delivered (obs.get then fails on a
-            # schemaless row). One never-matching row keeps the branch
-            # alive; "" can never equal a URI-qualified file path and is
-            # dropped by the _rel_of mapping below.
-            det = det.unionAll(
-                spark.range(1).select(F.lit("").alias("_meta_file"))
-            )
-            obs = Observation(f"_mrg_touched_{uuid.uuid4().hex}")
-            det = det.observe(obs, F.collect_set("_meta_file").alias("_t"))
-            keep = (
-                cand_df.join(F.broadcast(det), "_meta_file", "left_semi")
-                .join(key_set, keys, "left_anti")
-                .drop("_meta_file", "_meta_pos")
-            )
-            # evolve_schema: new columns in updates null-backfill kept
-            # rows, dropped columns null-fill the updates (Delta
-            # mergeSchema); updates=None is the keyed-DELETE path
-            # (delete_keys) — kept rows only, nothing re-added
-            rewritten = (
-                keep
-                if updates is None
-                else keep.unionByName(updates, allowMissingColumns=evolve_schema)
-            )
-        else:
-            # Two-action form — the scalable shape when candidates were
-            # NOT stats-pruned and are large: detection reads only the
-            # key columns of every candidate; the rewrite then reads
-            # full rows of the TOUCHED files alone.
-            touched_rel = {
-                rel
-                for r in (
-                    cand_df.join(key_set, keys, "left_semi")
-                    .select("_meta_file")
-                    .distinct()
-                    .collect()
-                )
-                if (rel := _rel_of(r._meta_file, candidates, table_dir))
-                is not None
-            }
-            if updates is None and not touched_rel:
-                return _delete_noop()
-            if touched_rel:
-                keep = _apply_dvs(
-                    spark,
-                    reader.parquet(
-                        *(os.path.join(table_dir, rel) for rel in touched_rel),
-                        with_meta=True,
-                    ),
-                    manifest,
-                    table_dir,
-                    sorted(touched_rel),
-                ).join(key_set, keys, "left_anti")
-                rewritten = (
-                    keep
-                    if updates is None
-                    else keep.unionByName(
-                        updates, allowMissingColumns=evolve_schema
-                    )
-                )
-            else:
-                rewritten = updates
-    else:
-        if updates is None:
-            # keyed DELETE with every file range-pruned: nothing can
-            # match — pure metadata no-op, nothing written at all
-            return _delete_noop()
-        rewritten = updates
-    if stats_for:
-        rewritten = rewritten.repartitionByRange(*stats_for).sortWithinPartitions(
-            *stats_for
-        )
-    new_files, new_stats, new_rows = _write_data_files(rewritten, table_dir, stats_for)
-    if obs is not None:
-        try:
-            touched_abs = set(obs.get["_t"])
-        except Exception:
-            # AQE empty-relation propagation can prune the observed
-            # subtree out of the executed plan when the PROBE side of
-            # the semi-join is runtime-empty (every candidate row
-            # DV-deleted, an empty batch, …) — the metrics row then
-            # arrives schemaless and obs.get fails. Detection is a
-            # deterministic function of immutable inputs (the
-            # manifest's files + the persisted key_set), so recomputing
-            # it as its own action yields exactly the set the write
-            # acted on; this costs the old dedicated detection job,
-            # only on these degenerate shapes.
-            touched_abs = {
-                r._meta_file
-                for r in (
-                    cand_df.join(key_set, keys, "left_semi")
-                    .select("_meta_file")
-                    .distinct()
-                    .collect()
-                )
-            }
-        # URI-qualified like the old collect (same decode mapping);
-        # the sentinel "" maps to no candidate and drops out here
-        touched_rel = {
-            rel
-            for t in touched_abs
-            if (rel := _rel_of(t, candidates, table_dir)) is not None
-        }
-    if updates is None and not touched_rel:
-        # keyed DELETE that matched nothing after all: publish the
-        # metadata no-op. The just-written commit dir holds no data
-        # (zero kept rows) and no manifest ever references it — the
-        # standard unpublished-commit residue, reclaimed by vacuum's
-        # orphan collection.
-        return _delete_noop()
-    untouched_rel = [rel for rel in rel_files if rel not in touched_rel]
     # Record the merged TYPED schema: parent's fields (order and types
     # preserved) plus any columns the updates introduced. This — not any
     # file footer — is what every later read/merge/compact pins to.
-    from pyspark.sql.types import StructType
-
     old_struct = _schema_struct(manifest)
     if old_struct is None:
-        old_struct = reader.parquet(
+        old_struct = _manifest_reader(spark, manifest, table_dir).parquet(
             *(os.path.join(table_dir, rel) for rel in rel_files)
         ).schema
-    widened: dict[str, str] = {}
-    if evolve_schema:
+    new_struct, widened = old_struct, {}
+    if evolve_schema and updates is not None:
         # shared fields take the WIDER of table/update types (legal
-        # widenings only, guarded in upsert_snapshot): old files promote
-        # at scan time under the pinned schema — type widening with
-        # zero rewrite (Delta's type widening)
+        # widenings only, guarded in _check_merge_batch): old files
+        # promote at scan time under the pinned schema — type widening
+        # with zero rewrite (Delta's type widening)
         new_struct, widened = _evolved_struct(old_struct, updates.schema)
-    else:
-        new_struct = old_struct
+
+    def _key_bounds():
+        row = key_set.agg(F.min(k0).alias("lo"), F.max(k0).alias("hi")).first()
+        return (row.lo, row.hi)
+
+    return _rewrite_commit(
+        spark, table_dir, base, manifest, txns, candidates,
+        op="merge" if updates is not None else "delete",
+        match=lambda rows: rows.join(key_set, keys, "left_semi"),
+        transform=lambda rows: rows.join(key_set, keys, "left_anti"),
+        inserts=updates, cdc=cdc, schema=fields,
+        schema_json=new_struct.json(), widened=widened,
+        key_col=k0, key_bounds=_key_bounds,
+    )
+
+
+def _rewrite_commit(
+    spark, table_dir, base, manifest, txns, candidates, *, op, match,
+    transform, inserts=None, post=None, cdc=False, schema=None,
+    schema_json=None, widened=None, key_col=None, key_bounds=None,
+) -> int:
+    """The copy-on-write rewrite commit behind MERGE
+    (:func:`upsert_snapshot`, :func:`merge_into`, :func:`stream_upsert`),
+    keyed DELETE (:func:`delete_keys`), :func:`delete_where` and
+    :func:`update_where`. It runs, in order: candidate scan, touched-
+    file detection, rewrite write, manifest, CDC sidecar and
+    :func:`_publish_or_rebase`.
+
+    The op has already chosen ``candidates`` — the files that may hold
+    a matching row (MERGE by its phase-1 key-range check, DELETE/UPDATE
+    WHERE by their ``key_range`` hint) — and supplies its row parts:
+
+    - ``match(rows)``: the rows it acts on (key-set semi-join or
+      predicate). A TOUCHED file is a candidate with a matched live row.
+    - ``transform(rows)``: the rows a touched file is rewritten to
+      (anti-join, ``~coalesce(cond, false)`` filter, SET projection).
+    - ``inserts``: rows the commit appends (MERGE's batch); they are
+      also the change feed's 'insert' rows.
+    - ``post(matched)``: the matched rows' post-images, recorded as
+      'insert' next to their 'delete' pre-images (UPDATE).
+
+    Only touched files are rewritten; every other file is carried
+    verbatim with its stats, rows, DVs and blooms.
+
+    Detection takes one of two forms:
+
+    - Fused (ONE write action): the matched files of the candidates,
+      plus a sentinel "" row, form the broadcast side of a semi-join
+      that keeps only the rows of touched files, and an Observation on
+      that side returns the touched-file list from the write job. The
+      sentinel keeps the branch alive when nothing matches — AQE's
+      empty-relation propagation would otherwise prune the observed
+      subtree; "" never equals a URI-qualified path.
+    - Two-action: a detection collect, then a write that reads only the
+      touched files.
+
+    The fused form reads full rows of EVERY candidate, so
+    :func:`_fuse_scan_ok` allows it only when the manifest stats pruned
+    some files (``pruned_by_stats > 0``: candidates then track the
+    change on a clustered table) or when the candidates are small.
+
+    Fallback: the observed list is read with a bounded probe
+    (:func:`_observed`). When the metrics row is missing or has no
+    schema (the observed subtree was pruned when the probe side was
+    runtime-empty, e.g. every candidate row DV-deleted), detection is
+    recomputed as its own action. That yields exactly the set the write
+    acted on: detection is a deterministic function of immutable inputs
+    (the files and the op's key set or deterministic predicate).
+
+    No-op: a commit that touches nothing and inserts nothing writes
+    nothing — the fused form deletes its just-written, empty commit dir
+    — and returns the current version, unless a txn watermark must be
+    recorded; that publishes a commit carrying every file."""
+    rel_files = manifest["files"]
+    pruned_by_stats = len(rel_files) - len(candidates)
+    reader = _manifest_reader(spark, manifest, table_dir)
+    stats_for = _stats_cols(manifest) if manifest.get("file_stats") else None
+    commit = os.path.join(_DATA_DIR, f"commit-{uuid.uuid4().hex}")
+
+    def _append(rows):
+        # evolve_schema: new columns in the inserts null-backfill kept
+        # rows, dropped columns null-fill the inserts (Delta mergeSchema)
+        if inserts is None:
+            return rows
+        return rows.unionByName(inserts, allowMissingColumns=True)
+
+    def _touched(paths) -> set[str]:
+        # URI-qualified paths back to manifest-relative ones; the
+        # sentinel "" maps to no candidate and drops out here
+        return {
+            rel for p in paths
+            if (rel := _rel_of(p, candidates, table_dir)) is not None
+        }
+
+    touched: set[str] = set()
+    rewritten = inserts
+    obs = None
+    if candidates:
+        # existing DVs anti-applied: a row already DV-deleted must not
+        # flag its file, be kept, or reappear in CDC
+        cand = reader.live(candidates, keep_meta=True)
+
+        def _detect() -> set[str]:
+            return _touched(
+                r._meta_file
+                for r in match(cand).select("_meta_file").distinct().collect()
+            )
+
+        if _fuse_scan_ok(table_dir, manifest, candidates, pruned_by_stats > 0):
+            det = (
+                match(cand)
+                .select("_meta_file")
+                .distinct()
+                .unionAll(spark.range(1).select(F.lit("").alias("_meta_file")))
+            )
+            obs = Observation(f"_touched_{uuid.uuid4().hex}")
+            det = det.observe(obs, F.collect_set("_meta_file").alias("_t"))
+            rewritten = _append(
+                transform(
+                    cand.join(F.broadcast(det), "_meta_file", "left_semi").drop(
+                        "_meta_file", "_meta_pos"
+                    )
+                )
+            )
+        else:
+            touched = _detect()
+            if touched:
+                rewritten = _append(transform(reader.live(sorted(touched))))
+    new_files, new_stats, new_rows = [], {}, {}
+    if rewritten is not None:
+        if stats_for:
+            rewritten = rewritten.repartitionByRange(*stats_for).sortWithinPartitions(
+                *stats_for
+            )
+        new_files, new_stats, new_rows = _write_data_files(
+            rewritten, table_dir, stats_for, commit=commit
+        )
+    if obs is not None:
+        seen = _observed(obs, "_t")
+        touched = _detect() if seen is None else _touched(seen)
+        if not touched and inserts is None:
+            # the write kept rows of touched files only: zero rows, and
+            # no manifest will ever reference the dir
+            shutil.rmtree(os.path.join(table_dir, commit), ignore_errors=True)
+            new_files, new_stats, new_rows = [], {}, {}
+    if not touched and inserts is None and txns == manifest.get("txns", {}):
+        return base
+    untouched = [rel for rel in rel_files if rel not in touched]
     version = base + 1
     new_manifest = {
         "version": version,
         "parent": base,
-        "files": [*untouched_rel, *new_files],
-        "op": "merge",
-        "rewrote": sorted(touched_rel),
+        "files": [*untouched, *new_files],
+        "op": op,
+        "rewrote": sorted(touched),
         "pruned_by_stats": pruned_by_stats,
-        "schema": sorted(tbl_fields | upd_fields if evolve_schema else tbl_fields),
-        "schema_json": new_struct.json(),
+        "schema": manifest.get("schema") if schema is None else schema,
+        "schema_json": schema_json or manifest.get("schema_json"),
     }
     if txns:
         new_manifest["txns"] = txns
     if manifest.get("constraints"):
         new_manifest["constraints"] = manifest["constraints"]
-    _carry_file_meta(manifest, new_manifest, untouched_rel, file_stats, new_stats, new_rows)
+    _carry_file_meta(
+        manifest, new_manifest, untouched, manifest.get("file_stats", {}),
+        new_stats, new_rows,
+    )
     _carry_blooms(
-        spark, table_dir, manifest, new_manifest, untouched_rel, new_files,
+        spark, table_dir, manifest, new_manifest, untouched, new_files,
         widened=widened,
     )
     if cdc:
         # Change-data sidecar (Delta's enableChangeDataFeed design): the
-        # merge's logical deltas — every update-batch row as 'insert',
-        # the pre-image of every matched key as 'delete' — written at
-        # commit time so the change-feed stream reads them directly with
-        # ZERO diff computation per trigger. Cost: one extra scan of the
-        # TOUCHED files only (change-proportional, like the rewrite).
-        ins = (
-            None if updates is None
-            else updates.withColumn("_change", F.lit("insert"))
-        )
-        pre = None
-        if touched_rel:
-            pre = (
-                _apply_dvs(
-                    spark,
-                    reader.parquet(
-                        *(os.path.join(table_dir, rel) for rel in touched_rel),
-                        with_meta=True,
-                    ),
-                    manifest,
-                    table_dir,
-                    sorted(touched_rel),
-                )
-                .join(key_set, keys, "left_semi")
-                .withColumn("_change", F.lit("delete"))
+        # commit's logical deltas written at commit time, so the change-
+        # feed stream reads them directly with ZERO diff computation per
+        # trigger. Cost: one extra scan of the TOUCHED files only.
+        changes = []
+        if touched:
+            pre = match(reader.live(sorted(touched)))
+            changes.append(pre.withColumn("_change", F.lit("delete")))
+            if post is not None:
+                changes.append(post(pre).withColumn("_change", F.lit("insert")))
+        if inserts is not None:
+            changes.append(inserts.withColumn("_change", F.lit("insert")))
+        if changes:
+            cdc_df = functools.reduce(
+                lambda a, b: a.unionByName(b, allowMissingColumns=True), changes
             )
-        if pre is not None and ins is not None:
-            cdc_df = pre.unionByName(ins, allowMissingColumns=True)
-        else:
-            cdc_df = ins if ins is not None else pre
-        # bound the sidecar file count: the delta frame inherits the
-        # session's shuffle partitioning (dozens of tiny files for a
-        # small change — measured 65 files for a 250-row delta); the
-        # feed then pays per-file open cost every drain. repartition,
-        # NOT coalesce: coalesce would cap the pre-image scan and
-        # semi-join upstream of the write at 8 tasks, serializing a
-        # bulk merge's change-proportional work; one change-sized
-        # shuffle buys full scan parallelism plus bounded files.
-        cdc_rel, _, _ = _write_data_files(cdc_df.repartition(8), table_dir)
-        if cdc_rel:
-            new_manifest["cdc_files"] = cdc_rel
-    def _merge_key_bounds():
-        row = key_set.agg(
-            F.min(keys[0]).alias("lo"), F.max(keys[0]).alias("hi")
-        ).first()
-        return (row.lo, row.hi)
-
+            # bound the sidecar file count: the delta frame inherits the
+            # session's shuffle partitioning (measured 65 files for a
+            # 250-row delta) and the feed pays per-file open cost every
+            # drain. repartition, NOT coalesce: coalesce would cap the
+            # pre-image scan upstream of the write at 8 tasks; one
+            # change-sized shuffle buys full scan parallelism plus
+            # bounded files.
+            cdc_rel, _, _ = _write_data_files(cdc_df.repartition(8), table_dir)
+            if cdc_rel:
+                new_manifest["cdc_files"] = cdc_rel
     return _publish_or_rebase(
-        table_dir, version, new_manifest, manifest,
-        set(touched_rel), new_files, keys[0], _merge_key_bounds,
+        table_dir, version, new_manifest, manifest, touched, new_files,
+        key_col, key_bounds,
     )
 
 
@@ -2482,9 +2483,8 @@ def _publish_or_rebase(
 
 
 def _merge_dv(
-    spark, table_dir, updates, keys, key_set, base, manifest, rel_files,
-    file_stats, txns, tbl_fields, upd_fields, evolve_schema, cdc,
-    candidates, pruned_by_stats,
+    spark, table_dir, updates, keys, key_set, base, manifest, txns, fields,
+    evolve_schema, cdc, candidates,
 ):
     """Merge-on-read MERGE (Delta's deletion-vector write path): matched
     pre-image rows are tombstoned by appending their (file, row
@@ -2501,27 +2501,18 @@ def _merge_dv(
     file in rewrite mode here yields the positions directly). Keyed
     DELETE (``updates is None``, via :func:`delete_keys` ``dv=True``)
     is the same commit minus the append."""
-    from pyspark.sql.types import StructType
-
+    rel_files = manifest["files"]
+    file_stats = manifest.get("file_stats", {})
+    pruned_by_stats = len(rel_files) - len(candidates)
     reader = _manifest_reader(spark, manifest, table_dir)
     dv_rels: list[str] = []
     counts: dict[str, int] = {}
     if candidates:
-        # _apply_dvs(keep_meta) both anti-applies existing DVs (a row
-        # already DV-dead must not be tombstoned twice — its sidecar
-        # entry would double-count in the manifest's rows) and carries
-        # the (file, position) metadata through any column-mapping union
-        cand = _apply_dvs(
-            spark,
-            reader.parquet(
-                *(os.path.join(table_dir, rel) for rel in candidates),
-                with_meta=True,
-            ),
-            manifest,
-            table_dir,
-            candidates,
-            keep_meta=True,
-        )
+        # live(keep_meta) both anti-applies existing DVs (a row already
+        # DV-dead must not be tombstoned twice — its sidecar entry would
+        # double-count in the manifest's rows) and carries the (file,
+        # position) metadata through any column-mapping union
+        cand = reader.live(candidates, keep_meta=True)
         matched = cand.join(key_set, keys, "left_semi").select(
             F.concat(
                 F.lit(_DATA_DIR + "/"), _dv_key_expr(F.col("_meta_file"))
@@ -2613,7 +2604,7 @@ def _merge_dv(
         "dv": True,
         "rewrote": [],
         "pruned_by_stats": pruned_by_stats,
-        "schema": sorted(tbl_fields | upd_fields if evolve_schema else tbl_fields),
+        "schema": fields,
         "schema_json": new_struct.json(),
     }
     if txns:
@@ -2985,16 +2976,7 @@ def compact_small(
     carried = [rel for rel in rel_files if rel not in set(small)]
     file_stats = manifest.get("file_stats", {})
     stats_for = _stats_cols(manifest) or None
-    reader = _manifest_reader(spark, manifest, table_dir)
-    df = _apply_dvs(
-        spark,
-        reader.parquet(
-            *(os.path.join(table_dir, rel) for rel in small), with_meta=True
-        ),
-        manifest,
-        table_dir,
-        small,
-    )
+    df = _manifest_reader(spark, manifest, table_dir).live(small)
     if stats_for:
         df = df.repartitionByRange(target_files, *stats_for).sortWithinPartitions(
             *stats_for
@@ -3220,195 +3202,25 @@ def update_where(
     (evaluated against the PRE-image row, all assignments
     simultaneously — ``{"a": "b", "b": "a"}`` swaps); rows where it is
     FALSE **or NULL** are untouched. Copy-on-write, published as one
-    atomic snapshot: detection scans only stats-candidate files
-    (optional ``key_range`` hint, same contract as delete_where), only
-    files truly containing a match are rewritten (re-clustered, stats
-    and blooms recomputed), everything else is carried verbatim. Each
-    SET result is cast to the column's recorded type (an expression
-    cannot silently widen or retype the schema — use
-    :func:`widen_column_type` for that); CHECK constraints are
-    re-validated on the post-image rows; ``cdc=True`` writes the
-    matched rows' delete+insert pairs at commit time. Idempotent via
-    (txn_app, txn_version); a predicate matching nothing is a no-op.
-    The predicate must be deterministic (evaluated in detection,
-    rewrite, and CDC scans — Delta's UPDATE has the same caveat)."""
-    for attempt in range(retries + 1):
-        try:
-            return _update_once(
-                spark, table_dir, set, condition, txn_app, txn_version,
-                cdc, key_range,
-            )
-        except ConcurrentCommitError:
-            if attempt == retries:
-                raise
-    raise AssertionError("unreachable")
-
-
-def _update_once(
-    spark, table_dir, set_map, condition, txn_app, txn_version, cdc, key_range
-) -> int:
-    if (txn_app is None) != (txn_version is None):
-        raise ValueError("txn_app and txn_version must be passed together")
-    if not set_map:
+    atomic snapshot by :func:`_rewrite_commit`: candidates are the
+    files the optional ``key_range`` hint keeps (same contract as
+    delete_where), only files truly containing a match are rewritten
+    (re-clustered, stats and blooms recomputed), everything else is
+    carried verbatim. Each SET result is cast to the column's recorded
+    type (an expression cannot silently widen or retype the schema —
+    use :func:`widen_column_type` for that); CHECK constraints are
+    validated on the matched rows' post-images before anything is
+    written; ``cdc=True`` writes the matched rows' delete+insert pairs
+    at commit time. Idempotent via (txn_app, txn_version); a predicate
+    matching nothing is a no-op. The predicate must be deterministic
+    (evaluated in validation, detection, rewrite and CDC scans —
+    Delta's UPDATE has the same caveat)."""
+    _txn_guard(txn_app, txn_version)
+    if not set:
         raise ValueError("update_where: empty SET")
-    base = latest_version(table_dir)
-    if base is None:
-        raise FileNotFoundError(f"no snapshots in {table_dir}")
-    manifest = read_manifest(table_dir, base)
-    txns: dict = dict(manifest.get("txns", {}))
-    if txn_app is not None and txns.get(txn_app, -1) >= txn_version:
-        return base  # replayed transaction: already applied, no-op
-    if txn_app is not None:
-        txns[txn_app] = int(txn_version)
-    struct = _schema_struct(manifest)
-    if struct is None:
-        raise RuntimeError(
-            "update_where requires a schema-recorded table (manifest "
-            "predates schema recording — rewrite it once via write_snapshot)"
-        )
-    types = {f.name: f.dataType for f in struct.fields}
-    unknown = set(set_map) - set(types)
-    if unknown:
-        raise ValueError(
-            f"update_where: SET targets {sorted(unknown)} not in table "
-            f"schema {sorted(types)}"
-        )
-    cond = F.expr(condition) if isinstance(condition, str) else condition
-    rel_files = manifest["files"]
-    file_stats: dict[str, dict] = manifest.get("file_stats", {})
-    candidates = rel_files
-    if key_range is not None:
-        col, lo, hi = key_range
-        events = _mapping_events(manifest)
-
-        def _keep(rel: str) -> bool:
-            s = _file_stat(manifest, events, rel, col)
-            if not s or s[0] is None or s[1] is None:
-                return True
-            return not (s[1] < lo or s[0] > hi)
-
-        candidates = [rel for rel in rel_files if _keep(rel)]
-    pruned_by_stats = len(rel_files) - len(candidates)
-    reader = _manifest_reader(spark, manifest, table_dir)
-    touched_rel: set[str] = set()
-    if candidates:
-        cand_df = _apply_dvs(
-            spark,
-            reader.parquet(
-                *(os.path.join(table_dir, rel) for rel in candidates),
-                with_meta=True,
-            ),
-            manifest,
-            table_dir,
-            candidates,
-            keep_meta=True,
-        )
-        hit = (
-            cand_df.filter(cond)
-            .select(F.col("_meta_file").alias("f"))
-            .distinct()
-            .collect()
-        )
-        touched_rel = {
-            rel
-            for r in hit
-            if (rel := _rel_of(r.f, candidates, table_dir)) is not None
-        }
-    if not touched_rel and txn_app is None:
-        return base  # nothing matched: no-op
-    untouched_rel = [rel for rel in rel_files if rel not in touched_rel]
-    hit_cond = F.coalesce(cond, F.lit(False))  # NULL predicate keeps the row
-    # all SET expressions evaluate against the PRE-image in ONE
-    # projection (simultaneous-assignment UPDATE semantics); results
-    # cast back to the column's recorded type
-    post_cols = [
-        (
-            F.when(hit_cond, F.expr(set_map[f.name]).cast(f.dataType))
-            .otherwise(F.col(f.name))
-            .alias(f.name)
-            if f.name in set_map
-            else F.col(f.name)
-        )
-        for f in struct.fields
-    ]
-    stats_for = None
-    if file_stats:
-        stats_for = _stats_cols(manifest)
-    new_files: list[str] = []
-    new_stats: dict = {}
-    new_rows: dict = {}
-    touched_df = None
-    if touched_rel:
-        touched_df = _apply_dvs(
-            spark,
-            reader.parquet(
-                *(os.path.join(table_dir, rel) for rel in touched_rel),
-                with_meta=True,
-            ),
-            manifest,
-            table_dir,
-            sorted(touched_rel),
-        )
-        # mark matches on the PRE-image: re-evaluating the predicate on
-        # the post-image would miss every row whose SET changed a
-        # predicate column (e.g. SET status='D' WHERE status='F' makes
-        # the predicate false on all updated rows), silently skipping
-        # CHECK validation of exactly the rows that changed
-        marked = touched_df.withColumn("_upd_hit", hit_cond)
-        rewritten_marked = marked.select(*post_cols, F.col("_upd_hit"))
-        cons = manifest.get("constraints")
-        if cons:
-            # post-images must still satisfy every CHECK constraint
-            _validate_constraints(
-                rewritten_marked.filter("_upd_hit").drop("_upd_hit"),
-                cons,
-                "UPDATE",
-            )
-        rewritten = rewritten_marked.drop("_upd_hit")
-        if stats_for:
-            rewritten = rewritten.repartitionByRange(*stats_for).sortWithinPartitions(
-                *stats_for
-            )
-        new_files, new_stats, new_rows = _write_data_files(
-            rewritten, table_dir, stats_for
-        )
-    version = base + 1
-    new_manifest = {
-        "version": version,
-        "parent": base,
-        "files": [*untouched_rel, *new_files],
-        "op": "update",
-        "rewrote": sorted(touched_rel),
-        "pruned_by_stats": pruned_by_stats,
-        "schema": manifest.get("schema"),
-        "schema_json": manifest.get("schema_json"),
-    }
-    if txns:
-        new_manifest["txns"] = txns
-    if manifest.get("constraints"):
-        new_manifest["constraints"] = manifest["constraints"]
-    _carry_file_meta(manifest, new_manifest, untouched_rel, file_stats, new_stats, new_rows)
-    _carry_blooms(spark, table_dir, manifest, new_manifest, untouched_rel, new_files)
-    if cdc and touched_rel:
-        # same pre-image marker: the matched set must be the rows the
-        # predicate hit BEFORE the update, never a post-image re-eval
-        matched = marked.filter("_upd_hit").drop("_upd_hit")
-        cdc_df = matched.withColumn("_change", F.lit("delete")).unionByName(
-            matched.select(*post_cols).withColumn("_change", F.lit("insert"))
-        )
-        cdc_rel, _, _ = _write_data_files(cdc_df.repartition(8), table_dir)
-        if cdc_rel:
-            new_manifest["cdc_files"] = cdc_rel
-    # lost-race resolution: with a key_range hint the same disjointness
-    # proof as MERGE applies (the hint asserts predicate ⊆ range);
-    # racing a no-file-added commit (epoch record, txn bump) rebases
-    # even without one
-    return _publish_or_rebase(
-        table_dir, version, new_manifest, manifest,
-        set(touched_rel), new_files,
-        key_range[0] if key_range else None,
-        (lambda: (key_range[1], key_range[2])) if key_range else None,
-    )
+    return _with_retries(retries, lambda: _where_once(
+        spark, table_dir, condition, set, txn_app, txn_version, cdc, key_range,
+    ))
 
 
 def delete_where(
@@ -3434,10 +3246,9 @@ def delete_where(
        range are carried verbatim — a general predicate cannot be
        interval-analyzed automatically, so the caller states the
        range the way read_snapshot callers do.
-    2. EXACT DETECTION: candidates get one ``_metadata.file_path``
-       scan under the predicate; only files truly containing a match
-       are re-read, filtered, and rewritten (re-clustered, stats
-       recorded). Everything else is carried.
+    2. EXACT DETECTION: only candidates truly containing a match are
+       re-read, filtered, and rewritten (re-clustered, stats
+       recorded); everything else is carried (:func:`_rewrite_commit`).
 
     ``dv=True`` switches to MERGE-ON-READ deletion vectors (Delta /
     Iceberg v2 semantics): instead of rewriting touched files, the
@@ -3467,209 +3278,90 @@ def delete_where(
     upsert_snapshot; a predicate matching nothing is a metadata no-op
     unless a txn watermark must be recorded. Optimistic-concurrency
     retry loop shared with MERGE."""
-    for attempt in range(retries + 1):
-        try:
-            return _delete_once(
-                spark, table_dir, condition, txn_app, txn_version, cdc,
-                key_range, dv,
-            )
-        except ConcurrentCommitError:
-            if attempt == retries:
-                raise
-    raise AssertionError("unreachable")
+    _txn_guard(txn_app, txn_version)
+    return _with_retries(retries, lambda: _where_once(
+        spark, table_dir, condition, None, txn_app, txn_version, cdc,
+        key_range, dv,
+    ))
 
 
-def _delete_once(
-    spark, table_dir, condition, txn_app, txn_version, cdc, key_range, dv=False
+def _where_once(
+    spark, table_dir, condition, set_map, txn_app, txn_version, cdc,
+    key_range, dv=False,
 ) -> int:
-    if (txn_app is None) != (txn_version is None):
-        raise ValueError("txn_app and txn_version must be passed together")
+    """One DELETE WHERE (``set_map`` None) or UPDATE WHERE attempt
+    against the current head: the predicate is the match, the
+    ``key_range`` hint the candidate step."""
     base = latest_version(table_dir)
     if base is None:
         raise FileNotFoundError(f"no snapshots in {table_dir}")
     manifest = read_manifest(table_dir, base)
-    txns: dict = dict(manifest.get("txns", {}))
-    if txn_app is not None and txns.get(txn_app, -1) >= txn_version:
+    txns = _txns_for(manifest, txn_app, txn_version)
+    if txns is None:
         return base  # replayed transaction: already applied, no-op
-    if txn_app is not None:
-        txns[txn_app] = int(txn_version)
     cond = F.expr(condition) if isinstance(condition, str) else condition
-    rel_files = manifest["files"]
-    file_stats: dict[str, dict] = manifest.get("file_stats", {})
-
-    candidates = rel_files
-    if key_range is not None:
-        col, lo, hi = key_range
-
-        events = _mapping_events(manifest)
-
-        def _keep(rel: str) -> bool:
-            s = _file_stat(manifest, events, rel, col)
-            if not s or s[0] is None or s[1] is None:
-                return True
-            return not (s[1] < lo or s[0] > hi)
-
-        candidates = [rel for rel in rel_files if _keep(rel)]
-    pruned_by_stats = len(rel_files) - len(candidates)
+    # SQL three-valued logic: a NULL predicate neither deletes nor
+    # updates its row — NOT(cond) alone would silently drop it. Filters
+    # match on plain ``cond`` (NULL already fails a filter), which
+    # parquet can push down; coalesce() cannot be pushed.
+    hit = F.coalesce(cond, F.lit(False))
+    candidates = _range_candidates(manifest, manifest["files"], key_range)
     reader = _manifest_reader(spark, manifest, table_dir)
-    if dv:
-        return _delete_dv(
-            spark, table_dir, manifest, reader, cond, candidates, base,
-            pruned_by_stats, txns, cdc, txn_app,
-        )
-
-    touched_rel: set[str] = set()
-    stats_for = None
-    if file_stats:
-        stats_for = _stats_cols(manifest)
-    new_files: list[str] = []
-    new_stats: dict = {}
-    new_rows: dict = {}
-    if candidates:
-        # existing DVs anti-applied: a row already DV-deleted must not
-        # flag its file, be counted as kept, or reappear in CDC
-        cand_df = _apply_dvs(
-            spark,
-            reader.parquet(
-                *(os.path.join(table_dir, rel) for rel in candidates),
-                with_meta=True,
-            ),
-            manifest,
-            table_dir,
-            candidates,
-            keep_meta=True,
-        )
-        # Detection fused into the rewrite action where the candidate
-        # scan is change-proportional (key_range-pruned) or small —
-        # same Observation/sentinel protocol as the MERGE path; the
-        # two-action form stays for big unhinted predicates (detection
-        # reads only the predicate columns there).
-        if _fuse_scan_ok(
-            table_dir, manifest, candidates,
-            key_range is not None and bool(file_stats),
-        ):
-            det = cand_df.filter(cond).select("_meta_file").distinct()
-            det = det.unionAll(
-                spark.range(1).select(F.lit("").alias("_meta_file"))
+    post = None
+    if set_map is None:
+        if dv:
+            return _delete_dv(
+                spark, table_dir, manifest, reader, cond, candidates, base,
+                len(manifest["files"]) - len(candidates), txns, cdc, txn_app,
             )
-            obs = Observation(f"_del_touched_{uuid.uuid4().hex}")
-            det = det.observe(obs, F.collect_set("_meta_file").alias("_t"))
-            # SQL DELETE keeps NULL-predicate rows: NOT(cond) alone
-            # would silently drop them
-            kept = (
-                cand_df.join(F.broadcast(det), "_meta_file", "left_semi")
-                .filter(~F.coalesce(cond, F.lit(False)))
-                .drop("_meta_file", "_meta_pos")
+        op, transform = "delete", (lambda rows: rows.filter(~hit))
+    else:
+        struct = _schema_struct(manifest)
+        if struct is None:
+            raise RuntimeError(
+                "update_where requires a schema-recorded table (manifest "
+                "predates schema recording — rewrite it once via write_snapshot)"
             )
-            if stats_for:
-                kept = kept.repartitionByRange(*stats_for).sortWithinPartitions(
-                    *stats_for
-                )
-            new_files, new_stats, new_rows = _write_data_files(
-                kept, table_dir, stats_for
+        types = {f.name: f.dataType for f in struct.fields}
+        unknown = set(set_map) - set(types)
+        if unknown:
+            raise ValueError(
+                f"update_where: SET targets {sorted(unknown)} not in table "
+                f"schema {sorted(types)}"
             )
-            try:
-                touched_abs = set(obs.get["_t"])
-            except Exception:
-                # observed subtree pruned by AQE empty-relation
-                # propagation (runtime-empty candidates) — recompute;
-                # sound because dv=False already requires a
-                # deterministic predicate (see delete_where docstring)
-                touched_abs = {
-                    r._meta_file
-                    for r in cand_df.filter(cond)
-                    .select("_meta_file")
-                    .distinct()
-                    .collect()
-                }
-            touched_rel = {
-                rel
-                for t in touched_abs
-                if (rel := _rel_of(t, candidates, table_dir)) is not None
-            }
-            if not touched_rel:
-                # matched nothing after all: the just-written commit dir
-                # holds no data and is never referenced — unpublished
-                # residue, reclaimed by vacuum's orphan collection. The
-                # kept/new_files bookkeeping below then records nothing.
-                new_files, new_stats, new_rows = [], {}, {}
-        else:
-            hit = (
-                cand_df.filter(cond)
-                .select(F.col("_meta_file").alias("f"))
-                .distinct()
-                .collect()
+        # all SET expressions evaluate against the PRE-image in ONE
+        # projection (simultaneous-assignment UPDATE semantics); results
+        # cast back to the column's recorded type
+        post_cols = [
+            (
+                F.when(hit, F.expr(set_map[f.name]).cast(f.dataType))
+                .otherwise(F.col(f.name))
+                .alias(f.name)
+                if f.name in set_map
+                else F.col(f.name)
             )
-            touched_rel = {
-                rel
-                for r in hit
-                if (rel := _rel_of(r.f, candidates, table_dir)) is not None
-            }
-            if touched_rel:
-                touched_df = _apply_dvs(
-                    spark,
-                    reader.parquet(
-                        *(os.path.join(table_dir, rel) for rel in touched_rel),
-                        with_meta=True,
-                    ),
-                    manifest,
-                    table_dir,
-                    sorted(touched_rel),
-                )
-                # SQL DELETE keeps NULL-predicate rows: NOT(cond) alone
-                # would silently drop them
-                kept = touched_df.filter(~F.coalesce(cond, F.lit(False)))
-                if stats_for:
-                    kept = kept.repartitionByRange(
-                        *stats_for
-                    ).sortWithinPartitions(*stats_for)
-                new_files, new_stats, new_rows = _write_data_files(
-                    kept, table_dir, stats_for
-                )
-    if not touched_rel and txn_app is None:
-        return base  # nothing matched, nothing to record: no-op
-    untouched_rel = [rel for rel in rel_files if rel not in touched_rel]
-    version = base + 1
-    new_manifest = {
-        "version": version,
-        "parent": base,
-        "files": [*untouched_rel, *new_files],
-        "op": "delete",
-        "rewrote": sorted(touched_rel),
-        "pruned_by_stats": pruned_by_stats,
-        "schema": manifest.get("schema"),
-        "schema_json": manifest.get("schema_json"),
-    }
-    if txns:
-        new_manifest["txns"] = txns
-    if manifest.get("constraints"):
-        new_manifest["constraints"] = manifest["constraints"]
-    _carry_file_meta(manifest, new_manifest, untouched_rel, file_stats, new_stats, new_rows)
-    _carry_blooms(spark, table_dir, manifest, new_manifest, untouched_rel, new_files)
-    if cdc and touched_rel:
-        deleted = (
-            _apply_dvs(
-                spark,
-                reader.parquet(
-                    *(os.path.join(table_dir, rel) for rel in touched_rel),
-                    with_meta=True,
-                ),
-                manifest,
-                table_dir,
-                sorted(touched_rel),
+            for f in struct.fields
+        ]
+        op, transform = "update", (lambda rows: rows.select(*post_cols))
+        post = transform
+        cons = manifest.get("constraints")
+        if cons and candidates:
+            # post-images must still satisfy every CHECK constraint. The
+            # predicate selects on the PRE-image: re-evaluating it on the
+            # post-image would miss every row whose SET changed a
+            # predicate column (SET status='D' WHERE status='F')
+            _validate_constraints(
+                transform(reader.live(candidates).filter(cond)), cons, "UPDATE"
             )
-            .filter(F.coalesce(cond, F.lit(False)))
-            .withColumn("_change", F.lit("delete"))
-        )
-        cdc_rel, _, _ = _write_data_files(deleted.repartition(8), table_dir)
-        if cdc_rel:
-            new_manifest["cdc_files"] = cdc_rel
-    # same lost-race rebase contract as update_where above
-    return _publish_or_rebase(
-        table_dir, version, new_manifest, manifest,
-        set(touched_rel), new_files,
-        key_range[0] if key_range else None,
-        (lambda: (key_range[1], key_range[2])) if key_range else None,
+    # lost-race resolution: with a key_range hint the same disjointness
+    # proof as MERGE applies (the hint asserts predicate ⊆ range);
+    # racing a no-file-added commit (epoch record, txn bump) rebases
+    # even without one
+    return _rewrite_commit(
+        spark, table_dir, base, manifest, txns, candidates, op=op,
+        match=lambda rows: rows.filter(cond), transform=transform, post=post,
+        cdc=cdc, key_col=key_range[0] if key_range else None,
+        key_bounds=(lambda: (key_range[1], key_range[2])) if key_range else None,
     )
 
 
@@ -3685,17 +3377,7 @@ def _delete_dv(
     dv_rels: list[str] = []
     counts: dict[str, int] = {}
     if candidates:
-        cand = _apply_dvs(
-            spark,
-            reader.parquet(
-                *(os.path.join(table_dir, rel) for rel in candidates),
-                with_meta=True,
-            ),
-            manifest,
-            table_dir,
-            candidates,
-            keep_meta=True,
-        )
+        cand = reader.live(candidates, keep_meta=True)
         matched = cand.filter(F.coalesce(cond, F.lit(False))).select(
             F.concat(
                 F.lit(_DATA_DIR + "/"), _dv_key_expr(F.col("_meta_file"))
@@ -3797,43 +3479,22 @@ def delete_keys(
     """Keyed DELETE: remove every row whose key appears in ``keys_df``
     (a DataFrame — keys never land on the driver, unlike a
     ``delete_where(col.isin(...))`` literal list). Exactly the MERGE
-    machinery with no insert side: manifest-stats pruning on the key
-    range, one ``_metadata.file_path`` semi-join to find truly-touched
-    files, DV-aware rewrite of only those files (anti-join), atomic
-    publish — cost proportional to files hit, never the table. A key
-    set matching nothing is a metadata no-op unless a txn watermark
-    must be recorded. Idempotent via (txn_app, txn_version); ``cdc``
+    machinery with no insert side (:func:`_upsert_once` with
+    ``updates=None``): manifest-stats pruning on the key range, then
+    the shared rewrite commit (:func:`_rewrite_commit`) rewrites only
+    the files truly holding a key — cost proportional to files hit,
+    never the table. A key set matching nothing is a metadata no-op
+    unless a txn watermark must be recorded. Idempotent via (txn_app, txn_version); ``cdc``
     writes the removed rows as a 'delete' change sidecar. This is the
     retraction half of CDC-driven downstream maintenance (e.g. the
     incremental ANN index: functions.clustering.stream_maintain_ivfpq).
     ``dv=True`` tombstones the matched positions in a DV sidecar
     instead of rewriting the files they live in (:func:`_merge_dv`)."""
-    if (txn_app is None) != (txn_version is None):
-        raise ValueError("txn_app and txn_version must be passed together")
-    for attempt in range(retries + 1):
-        base = latest_version(table_dir)
-        if base is None:
-            raise FileNotFoundError(f"no snapshots in {table_dir}")
-        manifest = read_manifest(table_dir, base)
-        txns: dict = dict(manifest.get("txns", {}))
-        if txn_app is not None and txns.get(txn_app, -1) >= txn_version:
-            return base  # replayed transaction: no-op
-        if txn_app is not None:
-            txns[txn_app] = int(txn_version)
-        tbl_fields = set(manifest.get("schema") or ())
-        key_set = keys_df.select(*keys).distinct().persist()
-        try:
-            return _merge_phases(
-                spark, table_dir, None, keys, key_set, base, manifest,
-                manifest["files"], manifest.get("file_stats", {}), txns,
-                tbl_fields, tbl_fields, False, cdc, dv,
-            )
-        except ConcurrentCommitError:
-            if attempt == retries:
-                raise
-        finally:
-            key_set.unpersist()
-    raise AssertionError("unreachable")
+    _txn_guard(txn_app, txn_version)
+    return _with_retries(retries, lambda: _upsert_once(
+        spark, table_dir, None, keys, txn_app, txn_version, cdc=cdc, dv=dv,
+        delete_keys_df=keys_df,
+    ))
 
 
 def _user_raised_error_text(e) -> str | None:
@@ -4943,19 +4604,12 @@ def merge_into(
     to ``retries`` times, then ConcurrentCommitError). The generic
     upsert retry alone would republish stale post-images over the
     racer's changes."""
-    for attempt in range(retries + 1):
-        try:
-            return _merge_into_once(
-                spark, table_dir, source, keys, update_set,
-                update_condition, delete_condition, insert,
-                insert_condition, txn_app, txn_version, cdc, dv,
-                not_matched_by_source_delete, not_matched_by_source_set,
-                not_matched_by_source_condition,
-            )
-        except ConcurrentCommitError:
-            if attempt == retries:
-                raise
-    raise AssertionError("unreachable")
+    return _with_retries(retries, lambda: _merge_into_once(
+        spark, table_dir, source, keys, update_set, update_condition,
+        delete_condition, insert, insert_condition, txn_app, txn_version,
+        cdc, dv, not_matched_by_source_delete, not_matched_by_source_set,
+        not_matched_by_source_condition,
+    ))
 
 
 def _merge_into_once(
