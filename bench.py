@@ -10,13 +10,13 @@ Every query — headline AND extended (unified in round 8; the headline
 set previously used a fixed 4-sweep min and absorbed ±14-47% scheduler
 jitter the extended set no longer suffered) — then reports a
 time-budgeted min: >=3 timed runs, and sub-second queries keep sampling
-to ~2 s of timed data (cap 8) — on those, scheduling jitter IS the
-runtime and a fixed-small-N min left ±16-39% tails between
-identical-code runs. The headline metric is the sum over the declared
-set. The DuckDB baseline is likewise warm-cache/second-run (BASELINE.md
-§2), so steady-state-vs-steady-state is the like-for-like comparison.
-Measured repeatability of
-THIS protocol (two identical-code runs, this VM): median |delta| ~8%,
+to ~2 s of timed data (cap $SPARK_GRAFT_MAX_RUNS, default 10) — on
+those, scheduling jitter IS the runtime and a fixed-small-N min left
+±16-39% tails between identical-code runs. The headline metric is the
+sum over the declared set. The DuckDB baseline is likewise
+warm-cache/second-run (BASELINE.md §2), so steady-state-vs-steady-state
+is the like-for-like comparison. Measured repeatability of THIS
+protocol (two identical-code runs, this VM): median |delta| ~8%,
 tails to ~30% under external load — the residual is machine-level
 throughput drift (multi-second execution-bound queries swing 28%
 between runs), so treat single-round deltas under ~1.3x as noise and
@@ -154,100 +154,101 @@ def run_query(fn, spark, sf_dir) -> float:
     return dt
 
 
+def bench_cpus() -> int:
+    """Effective core count: the bench is re-run at a lower
+    $SPARK_GRAFT_CPUS to measure core-count response, so the profile
+    derives from it and the JSON states what was actually used (r16
+    verdict ask #2: without this a reader cannot distinguish "honored
+    but floor-bound" from "ignored")."""
+    cpus_env = os.environ.get("SPARK_GRAFT_CPUS", "*")
+    return os.cpu_count() if cpus_env == "*" else int(cpus_env)
+
+
+def bench_conf(cpus: int) -> dict[str, str]:
+    """The tiny-input session profile (measured on this VM, headline set
+    at sf0.1; BASELINE.md §4): these knobs size the plan to a ~16 MB
+    corpus the same way shuffle partitions are sized to a cluster.
+    Cluster deployments use the get_spark defaults (AQE on, 128m splits,
+    2-3x cores shuffle partitions).
+    - shuffle_partitions=4: 32 reduce tasks over 16 MB is scheduling
+      overhead, not parallelism (0.88s -> 0.74s measured).
+    - AQE off: runtime re-planning has per-stage fixed cost that only
+      pays for itself when stage statistics can change the plan — at
+      16 MB it cannot (skew/coalesce do nothing) but still costs ~8%.
+    - constraintPropagation off: pure planning-time saver on multi-join
+      trees (plan_total 62ms -> 36ms measured for the 5 queries).
+    - maxPartitionBytes=2m: the scan stage otherwise runs as ONE task
+      (16 MB < 128m split) leaving 31 cores idle (0.74s -> 0.63s).
+    Split and shuffle scale with the core count BY CHOICE (identical to
+    the historical constants at cpus >= 8, so rounds stay comparable):
+    ~8 scan tasks / 4 reduce tasks fit any core count >= 8 at this
+    corpus size; below 8 cores both shrink so no stage exceeds the
+    cores available."""
+    return {
+        "spark.sql.shuffle.partitions": str(min(4, max(1, cpus))),
+        "spark.sql.adaptive.enabled": "false",
+        "spark.sql.constraintPropagation.enabled": "false",
+        "spark.sql.files.maxPartitionBytes": (
+            "2m" if cpus >= 8 else f"{max(2 * (8 // max(cpus, 1)), 2)}m"
+        ),
+    }
+
+
+def bench_session(app_name: str, extra_conf: dict | None = None):
+    """get_spark with bench_conf for this process's core count: the one
+    session profile every measurement script shares with bench.py."""
+    conf = {**bench_conf(bench_cpus()), **(extra_conf or {})}
+    return get_spark(app_name, extra_conf=conf)
+
+
+def budgeted_min(fn, spark, sf_dir) -> tuple[float, int, float]:
+    """Variance-targeted min (r8 verdict ask #5, extending the r6/r7
+    budgeted-min protocol): at least 3 timed runs, keep sampling
+    sub-second queries until ~2 s of timed samples, and keep sampling
+    ANY query until the min CONVERGES: the two smallest samples within
+    SPARK_GRAFT_CONV_PCT (default 3%) of each other, cap
+    SPARK_GRAFT_MAX_RUNS (default 10). Rationale, measured on this VM: a
+    fixed sample count leaves the min estimator unconverged exactly on
+    the queries where per-stage scheduling jitter IS the runtime,
+    producing ±16-39% deltas on untouched code; gating on min-gap
+    targets the variance directly instead of guessing a count. Returns
+    (min, n_samples, min_gap) — the sample count and residual gap are
+    emitted into the bench JSON so round-over-round drift is
+    diagnosable per query."""
+    from ray_beam_runner_spark.caches import release_tracked
+
+    min_runs = max(1, int(os.environ.get("SPARK_GRAFT_EXTRA_RUNS", "3")))
+    budget = float(os.environ.get("SPARK_GRAFT_EXTRA_BUDGET_SEC", "2.0"))
+    conv = float(os.environ.get("SPARK_GRAFT_CONV_PCT", "3")) / 100.0
+    cap = max(min_runs, int(os.environ.get("SPARK_GRAFT_MAX_RUNS", "10")))
+    samples: list[float] = []
+    while True:
+        dt = run_query(fn, spark, sf_dir)
+        release_tracked()  # drop operator-persisted intermediates
+        spark.catalog.clearCache()  # isolate queries (no leaked persists)
+        samples.append(dt)
+        n, spent = len(samples), sum(samples)
+        s = sorted(samples)
+        gap = (s[1] - s[0]) / s[0] if n >= 2 else float("inf")
+        if n >= cap:
+            break
+        if n >= min_runs and gap <= conv and (spent >= budget or s[0] >= 1.0):
+            break
+    s = sorted(samples)
+    return round(s[0], 4), len(samples), round((s[1] - s[0]) / s[0], 4)
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = float(os.path.basename(sf_dir.rstrip("/")).replace("sf", "") or 0.1)
-    # Effective core count, for the scaling knobs below and the output
-    # record: the driver re-runs this bench at a lower $SPARK_GRAFT_CPUS
-    # to measure core-count response, so the profile must derive from it
-    # and the JSON must state what was actually used (r16 verdict ask
-    # #2: without this the driver cannot distinguish "honored but
-    # floor-bound" from "ignored").
-    cpus_env = os.environ.get("SPARK_GRAFT_CPUS", "*")
-    cpus = os.cpu_count() if cpus_env == "*" else int(cpus_env)
-    # Tiny-input knobs scale with the core count BY CHOICE (identical to
-    # the historical constants at cpus >= 8, so rounds stay comparable):
-    # ~8 scan tasks / 4 reduce tasks fit any core count >= 8 at this
-    # corpus size; below 8 cores both shrink so no stage exceeds the
-    # cores available.
-    shuffle_default = str(min(4, max(1, cpus)))
-    split_default = "2m" if cpus >= 8 else f"{max(2 * (8 // max(cpus, 1)), 2)}m"
-    # Tiny-input profile (measured on this VM, headline set at sf0.1;
-    # BASELINE.md §4): these knobs size the plan to a ~16 MB corpus the
-    # same way shuffle partitions are sized to a cluster. Each is
-    # env-overridable; cluster deployments use the get_spark defaults
-    # (AQE on, 128m splits, 2-3x cores shuffle partitions).
-    # - shuffle_partitions=4: 32 reduce tasks over 16 MB is scheduling
-    #   overhead, not parallelism (0.88s -> 0.74s measured).
-    # - AQE off: runtime re-planning has per-stage fixed cost that only
-    #   pays for itself when stage statistics can change the plan — at
-    #   16 MB it cannot (skew/coalesce do nothing) but still costs ~8%.
-    # - constraintPropagation off: pure planning-time saver on multi-join
-    #   trees (plan_total 62ms -> 36ms measured for the 5 queries).
-    # - maxPartitionBytes=2m: the scan stage otherwise runs as ONE task
-    #   (16 MB < 128m split) leaving 31 cores idle (0.74s -> 0.63s).
-    spark = get_spark(
-        "bench",
-        shuffle_partitions=int(os.environ.get("SPARK_GRAFT_SHUFFLE", shuffle_default)),
-        extra_conf={
-            "spark.sql.adaptive.enabled": os.environ.get("SPARK_GRAFT_AQE", "false"),
-            "spark.sql.constraintPropagation.enabled": os.environ.get(
-                "SPARK_GRAFT_CONSTRAINT_PROP", "false"
-            ),
-            "spark.sql.files.maxPartitionBytes": os.environ.get(
-                "SPARK_GRAFT_SPLIT", split_default
-            ),
-        },
-    )
+    cpus = bench_cpus()
+    spark = bench_session("bench")
 
     from ray_beam_runner_spark.caches import release_tracked
-
-    def budgeted_min(fn) -> tuple[float, int, float]:
-        # Variance-targeted min (r8 verdict ask #5, extending the r6/r7
-        # budgeted-min protocol): at least 3 timed runs, keep sampling
-        # sub-second queries until ~2 s of timed samples, and — new —
-        # keep sampling ANY query until the min CONVERGES: the two
-        # smallest samples within SPARK_GRAFT_CONV_PCT (default 3%) of
-        # each other, cap SPARK_GRAFT_MAX_RUNS (default 10). Rationale,
-        # measured on this VM: a fixed sample count leaves the min
-        # estimator unconverged exactly on the queries where per-stage
-        # scheduling jitter IS the runtime, producing ±16-39% deltas on
-        # untouched code; gating on min-gap targets the variance
-        # directly instead of guessing a count. Returns (min, n_samples,
-        # min_gap) — the sample count and residual gap are emitted into
-        # the bench JSON so round-over-round drift is diagnosable per
-        # query.
-        min_runs = max(1, int(os.environ.get("SPARK_GRAFT_EXTRA_RUNS", "3")))
-        budget = float(os.environ.get("SPARK_GRAFT_EXTRA_BUDGET_SEC", "2.0"))
-        conv = float(os.environ.get("SPARK_GRAFT_CONV_PCT", "3")) / 100.0
-        cap = max(min_runs, int(os.environ.get("SPARK_GRAFT_MAX_RUNS", "10")))
-        samples: list[float] = []
-        while True:
-            dt = run_query(fn, spark, sf_dir)
-            release_tracked()  # drop operator-persisted intermediates
-            spark.catalog.clearCache()  # isolate queries (no leaked persists)
-            samples.append(dt)
-            n, spent = len(samples), sum(samples)
-            s = sorted(samples)
-            gap = (s[1] - s[0]) / s[0] if n >= 2 else float("inf")
-            if n >= cap:
-                break
-            if n >= min_runs and gap <= conv and (spent >= budget or s[0] >= 1.0):
-                break
-        s = sorted(samples)
-        return round(s[0], 4), len(samples), round((s[1] - s[0]) / s[0], 4)
 
     timings: dict[str, float] = {}
     samples_out: dict[str, int] = {}
     gaps_out: dict[str, float] = {}
-    if os.environ.get("SPARK_GRAFT_TIMED_SWEEPS"):
-        print(
-            "bench.py: SPARK_GRAFT_TIMED_SWEEPS is obsolete since the "
-            "unified budgeted-min protocol (round 8) — every query, "
-            "headline included, is governed by SPARK_GRAFT_EXTRA_RUNS / "
-            "SPARK_GRAFT_EXTRA_BUDGET_SEC; the variable is ignored",
-            file=sys.stderr,
-        )
     # 5 warm-up sweeps: the JIT curve at sf0.1 is still descending at 3
     # (measured 0.78s headline after 3+2 sweeps vs 0.69s after 5+4).
     warmup_sweeps = int(os.environ.get("SPARK_GRAFT_WARMUP_SWEEPS", "5"))
@@ -256,13 +257,15 @@ def main() -> None:
         for name in headline:
             run_query(QUERIES[name], spark, sf_dir)
     for name in headline:
-        timings[name], samples_out[name], gaps_out[name] = budgeted_min(QUERIES[name])
+        timings[name], samples_out[name], gaps_out[name] = budgeted_min(
+            QUERIES[name], spark, sf_dir
+        )
 
     for name in (n for n in EXTRA_SET if n in QUERIES):
         fn = QUERIES[name]
         run_query(fn, spark, sf_dir)  # warm: plan cache + OS page cache
         release_tracked()
-        timings[name], samples_out[name], gaps_out[name] = budgeted_min(fn)
+        timings[name], samples_out[name], gaps_out[name] = budgeted_min(fn, spark, sf_dir)
 
     total = round(sum(timings[n] for n in BENCH_SET if n in timings), 4)
     detail = {

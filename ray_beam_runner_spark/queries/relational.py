@@ -28,9 +28,10 @@ from ray_beam_runner_spark.queries import query, scratch_dir, t
 #
 # The round-14 spelling summed per-row DECIMAL(20,0) cents. Exact, but
 # measured ~66% slower than plain double sums on the sf0.1 Q1 shape:
-# phase-split profiling (scripts/profile_cents*.py, r15) showed the
-# cost is EXECUTION, not plan compile (janino codegen-cache hits — 0
-# recompiles across fresh plans): (a) Spark's Round-on-double goes
+# phase-split profiling (scripts/profile_cents*.py, r15; removed since,
+# last present at commit e51f868) showed the cost is EXECUTION, not
+# plan compile (janino codegen-cache hits — 0 recompiles across fresh
+# plans): (a) Spark's Round-on-double goes
 # through BigDecimal.setScale per row, and (b) a >18-digit decimal
 # aggregation buffer disqualifies the codegen'd fast hash map. Both
 # are avoided without giving up exactness:

@@ -32,9 +32,10 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from bench import BENCH_SET  # noqa: E402
+
 SRC = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 ROOT = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".benchdata")
-BENCH_SET = ("q_agg", "q_join", "q_window", "q_events_window", "q_distinct")
 TABLES = ("lineitem", "orders", "customer", "nation", "events")
 
 # per-table key columns to offset per replica copy (cardinality-preserving
@@ -157,6 +158,30 @@ def time_duckdb(data_dir: str) -> dict[str, float]:
     return out
 
 
+def size_to_leg(spark, data_dir: str, tables, mult: int, shuffle_by_mult: dict) -> None:
+    """Size the session to the leg's input, the same way bench.py sizes
+    sf0.1 (and a cluster deployment sizes shuffle partitions to its
+    executors) — one fixed conf either starves the x1 leg with reduce
+    tasks or scans the x100 leg too coarsely:
+    - scan splits: biggest of ``tables`` / ~2 tasks per core, floored at
+      bench.py's 2 MB; matches DuckDB's row-group parallelism on the
+      same files.
+    - shuffle partitions: ``shuffle_by_mult[mult]`` (64 past the map);
+      scheduling cost dominates under ~50 MB of shuffle input, so grow
+      with the leg instead of paying 32 reduce tasks on a 16 MB corpus."""
+
+    def _sz(p: str) -> int:
+        if os.path.isdir(p):
+            return sum(os.path.getsize(os.path.join(p, f)) for f in os.listdir(p))
+        return os.path.getsize(p)
+
+    paths = (os.path.join(data_dir, f"{t}.parquet") for t in tables)
+    biggest = max(_sz(p) for p in paths if os.path.exists(p))
+    split = max(2 * 1024 * 1024, biggest // 64)
+    spark.conf.set("spark.sql.files.maxPartitionBytes", str(split))
+    spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_by_mult.get(mult, 64)))
+
+
 def time_spark(data_dir: str, mult: int, warmups: int = 3, timed: int = 2) -> dict[str, float]:
     from ray_beam_runner_spark import get_spark
     from ray_beam_runner_spark.queries import QUERIES
@@ -168,27 +193,7 @@ def time_spark(data_dir: str, mult: int, warmups: int = 3, timed: int = 2) -> di
     spark = get_spark(
         "bench-scaling", extra_conf={"spark.driver.maxResultSize": "8g"}
     )
-    # Size the session to the leg's input, the same way bench.py sizes
-    # sf0.1 (and a cluster deployment sizes shuffle partitions to its
-    # executors) — one fixed conf either starves the x1 leg with reduce
-    # tasks or scans the x100 leg too coarsely:
-    # - scan splits: biggest table / ~2 tasks per core, floored at bench.py's
-    #   2 MB; matches DuckDB's row-group parallelism on the same files.
-    # - shuffle partitions: scheduling cost dominates under ~50 MB of
-    #   shuffle input, so grow with the leg instead of paying 32 reduce
-    #   tasks on a 16 MB corpus.
-    def _sz(p: str) -> int:
-        if os.path.isdir(p):
-            return sum(
-                os.path.getsize(os.path.join(p, f)) for f in os.listdir(p)
-            )
-        return os.path.getsize(p)
-
-    biggest = max(_sz(os.path.join(data_dir, f"{t}.parquet")) for t in TABLES)
-    split = max(2 * 1024 * 1024, biggest // 64)
-    shuffle = {1: 4, 10: 8, 100: 16}.get(mult, 64)
-    spark.conf.set("spark.sql.files.maxPartitionBytes", str(split))
-    spark.conf.set("spark.sql.shuffle.partitions", str(shuffle))
+    size_to_leg(spark, data_dir, TABLES, mult, {1: 4, 10: 8, 100: 16})
     out: dict[str, float] = {}
     for _ in range(warmups):
         for name in BENCH_SET:

@@ -24,6 +24,8 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from scripts.bench_scaling import size_to_leg  # noqa: E402
+
 SRC = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 ROOT = os.path.join(
     os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".benchdata"
@@ -69,19 +71,7 @@ def time_spark(data_dir: str, mult: int, warmups: int = 2, timed: int = 2) -> di
     spark = get_spark(
         "bench-sweep-scaling", extra_conf={"spark.driver.maxResultSize": "8g"}
     )
-    # same leg-proportional sizing as bench_scaling.time_spark
-    p = os.path.join(data_dir, "events.parquet")
-    size = (
-        sum(os.path.getsize(os.path.join(p, f)) for f in os.listdir(p))
-        if os.path.isdir(p)
-        else os.path.getsize(p)
-    )
-    spark.conf.set(
-        "spark.sql.files.maxPartitionBytes", str(max(2 * 1024 * 1024, size // 64))
-    )
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str({1: 4, 10: 8, 100: 32}.get(mult, 64))
-    )
+    size_to_leg(spark, data_dir, ("events",), mult, {1: 4, 10: 8, 100: 32})
     out: dict[str, float] = {}
     for _ in range(warmups):
         for name in SWEEP_SET:

@@ -27,7 +27,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from scripts.bench_scaling import build_scaled, _pq  # noqa: E402
+from scripts.bench_scaling import build_scaled, _pq, size_to_leg  # noqa: E402
 
 SRC = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 TPCH_SET = (
@@ -82,21 +82,7 @@ def _tuned_session(data_dir: str, mult: int):
     spark = get_spark(
         "bench-tpch-scaling", extra_conf={"spark.driver.maxResultSize": "8g"}
     )
-
-    def _sz(p: str) -> int:
-        if os.path.isdir(p):
-            return sum(os.path.getsize(os.path.join(p, f)) for f in os.listdir(p))
-        return os.path.getsize(p)
-
-    biggest = max(
-        _sz(os.path.join(data_dir, f"{t}.parquet"))
-        for t in ALL_TABLES
-        if os.path.exists(os.path.join(data_dir, f"{t}.parquet"))
-    )
-    split = max(2 * 1024 * 1024, biggest // 64)
-    shuffle = {1: 4, 10: 8, 100: 16}.get(mult, 64)
-    spark.conf.set("spark.sql.files.maxPartitionBytes", str(split))
-    spark.conf.set("spark.sql.shuffle.partitions", str(shuffle))
+    size_to_leg(spark, data_dir, ALL_TABLES, mult, {1: 4, 10: 8, 100: 16})
     # Spark's SHIPPED broadcast threshold (10m), not the repo session's
     # tiny-scale 64m: at x100 the 1.5M-row customer table slips under
     # 64m and gets broadcast — measured 2.3x slower than the shuffle
@@ -252,7 +238,7 @@ def time_spark_both(data_dir: str, mult: int) -> tuple[dict, dict, dict, dict]:
     return plain_t, routed_t, exchanges, build
 
 
-def time_spj(data_dir: str, shuffled_q5_s: float, duck_q5_s: float) -> dict:
+def time_spj(data_dir: str, mult: int, shuffled_q5_s: float, duck_q5_s: float) -> dict:
     """Storage-partitioned-join leg (round-12 verdict ask #2): write
     lineitem/orders ONCE as co-bucketed snapshot tables on the order
     key (sources/bucketed.py — the one-time layout cost a 100 TB fact
@@ -264,13 +250,10 @@ def time_spj(data_dir: str, shuffled_q5_s: float, duck_q5_s: float) -> dict:
     _tuned_session (identical engine setup)."""
     from pyspark.sql import functions as F
 
-    from ray_beam_runner_spark import get_spark
     from ray_beam_runner_spark.plans.explain import count_exchanges
     from ray_beam_runner_spark.sources import bucketed as bkt
 
-    spark = get_spark(
-        "bench-tpch-scaling", extra_conf={"spark.driver.maxResultSize": "8g"}
-    )
+    spark = _tuned_session(data_dir, mult)
     base = os.path.join(data_dir, "_spj")
     li_dir = os.path.join(base, "lineitem")
     ord_dir = os.path.join(base, "orders")
@@ -448,7 +431,10 @@ def main():
         r["query"] for r in rows if r["ratio_routed"] and r["ratio_routed"] > 2.0
     ]
     spj = time_spj(
-        data_dir, spark["q_local_supplier_volume"], duck["q_local_supplier_volume"]
+        data_dir,
+        args.mult,
+        spark["q_local_supplier_volume"],
+        duck["q_local_supplier_volume"],
     )
     out = {
         "metric": "tpch_family_scaling",

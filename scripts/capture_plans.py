@@ -14,11 +14,9 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from ray_beam_runner_spark import get_spark
+from bench import BENCH_SET, bench_session
 from ray_beam_runner_spark.plans.explain import formatted_plan
 from ray_beam_runner_spark.queries import QUERIES
-
-BENCH_SET = ("q_agg", "q_join", "q_window", "q_events_window", "q_distinct")
 
 
 def main() -> int:
@@ -32,16 +30,8 @@ def main() -> int:
         "plans", "r17",
     )
     os.makedirs(out_dir, exist_ok=True)
-    # bench.py's session confs so the captured plan is the benched plan
-    spark = get_spark(
-        "capture_plans",
-        shuffle_partitions=int(os.environ.get("SPARK_GRAFT_SHUFFLE", "4")),
-        extra_conf={
-            "spark.sql.adaptive.enabled": "false",
-            "spark.sql.constraintPropagation.enabled": "false",
-            "spark.sql.files.maxPartitionBytes": "2m",
-        },
-    )
+    # bench.py's session profile so the captured plan is the benched plan
+    spark = bench_session("capture_plans")
     for name in names:
         df = QUERIES[name](spark, sf_dir)
         p = os.path.join(out_dir, f"{name}_{tag}.txt")

@@ -182,24 +182,6 @@ def test_salted_join_matches_plain(spark, sf_dir):
     assert sorted(map(tuple, salted.collect())) == sorted(map(tuple, plain.collect()))
 
 
-def test_observe_counts(spark, sf_dir):
-    # per-PCollection element-count monitoring (reference monitoring infos,
-    # ray_fn_runner.py:462-534) — piggybacks on the action, no extra pass
-    from pyspark.sql import functions as F
-
-    from ray_beam_runner_spark.plans.observe import observe_counts, observed_result
-    from ray_beam_runner_spark.queries import t as load
-
-    li = load(spark, sf_dir, "lineitem")
-    mid, obs = observe_counts(li.filter(F.col("l_quantity") > 25), "post_filter")
-    out = mid.groupBy("l_returnflag").count()
-    out.collect()
-    res = observed_result(obs)
-    exact = li.filter(F.col("l_quantity") > 25).count()
-    assert res["element_count"] == exact
-    assert res["approx_bytes"] > 0
-
-
 def test_bucketed_join_no_shuffle(spark, sf_dir, tmp_path):
     # bucketing for co-located joins: both sides bucketed on the key join
     # WITHOUT a shuffle exchange (the 100 TB repeated-join strategy)
