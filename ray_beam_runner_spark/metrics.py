@@ -8,7 +8,11 @@ counter of 6 and a distribution with sum=10/count=4/min=1/max=4). The
 reference also auto-attaches ELEMENT_COUNT monitoring infos to every
 PCollection (`ray_fn_runner.py:462-534`, tests `ray_runner_test.py:
 1195-1615`); here those ride Spark's Observation API — an aggregate
-piggybacked on the transform's own pass, zero extra actions.
+piggybacked on the transform's own pass, zero extra actions. The
+PCollections inside a fused stage (pipeline.py) have no DataFrame of
+their own: the stage's Python pass counts them and one Observation on
+the stage output reports all of them. Each Observation's columns are
+``<pcollection>.element_count`` / ``<pcollection>.byte_count``.
 
 Spark mapping: SparkContext accumulators, updated from inside pandas-UDF
 workers and merged on the driver. Counters use the plain long accumulator;
@@ -91,8 +95,10 @@ class MetricsRegistry:
         self._counters: dict[str, Counter] = {}
         self._dists: dict[str, Distribution] = {}
         self._gauges: dict[str, Gauge] = {}
-        self._observations: dict = {}  # name -> pyspark.sql.Observation
-        self._resolved_rows: dict[str, dict] = {}  # completed observation rows
+        # engine-level Observations: columns "<pcollection>.element_count"
+        # and "<pcollection>.byte_count"; one covers a whole fused stage
+        self._observations: list = []
+        self._resolved_rows: dict = {}  # Observation -> completed row
 
     def counter(self, name: str) -> Counter:
         if name not in self._counters:
@@ -113,11 +119,11 @@ class MetricsRegistry:
             )
         return self._gauges[name]
 
-    def track_observation(self, name: str, obs) -> None:
+    def track_observation(self, obs) -> None:
         """Register an engine-level Observation (auto element counts)."""
-        self._observations[name] = obs
+        self._observations.append(obs)
 
-    def _resolved(self, name: str, obs) -> dict | None:
+    def _resolved(self, obs) -> dict | None:
         """The observation's metrics dict if its action has run, else None.
 
         Observation.get would BLOCK forever for a plan that never
@@ -125,15 +131,15 @@ class MetricsRegistry:
         still-pending observation costs up to that per query() call —
         resolved rows are cached here so the cost is paid once, and only
         for plans that were built but never executed."""
-        if name in self._resolved_rows:
-            return self._resolved_rows[name]
+        if obs in self._resolved_rows:
+            return self._resolved_rows[obs]
         try:
             if obs._jo.getRowOrEmpty().isEmpty():
                 return None
         except Exception:  # noqa: BLE001 - not yet attached / session gone
             return None
         row = dict(obs.get)
-        self._resolved_rows[name] = row
+        self._resolved_rows[obs] = row
         return row
 
     def flush(self):
@@ -141,11 +147,13 @@ class MetricsRegistry:
         lifecycle symmetry with the reference's monitoring-info commit)."""
 
     def query(self) -> dict:
-        rows = {
-            name: row
-            for name, obs in self._observations.items()
-            if (row := self._resolved(name, obs)) is not None
-        }
+        # A PCollection inside several executed stages (a chain prefix
+        # shared by two consumers) reports its first resolved count.
+        counts: dict[str, dict[str, int]] = {"element_count": {}, "byte_count": {}}
+        for obs in self._observations:
+            for col, v in (self._resolved(obs) or {}).items():
+                name, kind = col.rsplit(".", 1)
+                counts[kind].setdefault(name, int(v))
         return {
             "counters": {name: c._acc.value for name, c in self._counters.items()},
             "distributions": {
@@ -157,12 +165,6 @@ class MetricsRegistry:
                 for name, g in self._gauges.items()
                 if g._acc.value[0] is not None
             },
-            "element_counts": {
-                name: int(row["element_count"]) for name, row in rows.items()
-            },
-            "byte_counts": {
-                name: int(row["byte_count"])
-                for name, row in rows.items()
-                if "byte_count" in row
-            },
+            "element_counts": counts["element_count"],
+            "byte_counts": counts["byte_count"],
         }

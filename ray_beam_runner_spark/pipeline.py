@@ -25,6 +25,18 @@ and pickled ``binary`` otherwise (the Beam-coder-equivalent opaque path;
 the reference is *always* opaque bytes). Opaque user Python runs through
 ``mapInPandas`` (Arrow batches); everything else is DataFrame expressions.
 
+Stage fusion (the reference's greedily_fuse + one SDK-worker pass per
+stage): element-wise Python transforms (single-output ParDo with
+broadcast side inputs, map, flat_map, filter, map_to_kv,
+with_timestamps, map_kv_values, the CoGBK pair fold) do not build a
+DataFrame. Each extends its input's pending ``_Stage``, and the chain
+runs as ONE ``mapInPandas`` when something first reads ``.df`` (GBK,
+combine, collect, window_into, a side-input view, a join, a
+multi-output ParDo). That pass decodes each element once, hands plain
+Python objects from step to step and encodes once. Per-PCollection
+element/byte counts of the steps inside it ride marker rows into one
+Observation.
+
 Bounded scope (matches the reference's own rejections): default trigger
 only, event-time timers only (ray_fn_runner.py:92-100), no TestStream.
 Side-input views materialize to a broadcast (bounded size — same
@@ -37,9 +49,14 @@ import inspect
 import os
 import pickle
 from collections.abc import Callable, Iterable
+from dataclasses import dataclass
+from functools import partial
+from operator import itemgetter
 from typing import Any
 
+import numpy as np
 import pandas as pd
+from pyspark import cloudpickle
 from pyspark.accumulators import AccumulatorParam
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
@@ -58,8 +75,8 @@ GLOBAL_TS = 0.0
 _PICKLE = pickle.HIGHEST_PROTOCOL
 
 
-def _dumps(v) -> bytes:
-    return pickle.dumps(v, protocol=_PICKLE)
+_dumps = partial(pickle.dumps, protocol=_PICKLE)
+_first = itemgetter(0)
 
 
 def _loads(b) -> Any:
@@ -86,7 +103,9 @@ class DoFn:
     0..N outputs (plain values or TaggedOutput). setup/start_bundle run
     before the first element of each task, finish_bundle/teardown after
     the last — the pandas-UDF iterator form gives the exact hook points
-    the reference gets from DoFnInvoker (translator.py:283-326)."""
+    the reference gets from DoFnInvoker (translator.py:283-326). In a
+    fused stage, later DoFns set up and start first and earlier ones
+    finish first, so finish_bundle outputs reach the DoFns after them."""
 
     def setup(self):  # pragma: no cover - trivial default
         pass
@@ -102,21 +121,6 @@ class DoFn:
 
     def teardown(self):  # pragma: no cover
         pass
-
-
-class _FnDoFn(DoFn):
-    def __init__(self, fn: Callable, mode: str):
-        self.fn = fn
-        self.mode = mode  # map | flat_map | filter
-
-    def process(self, element, timestamp=None, window=None, **side):
-        if self.mode == "map":
-            yield self.fn(element)
-        elif self.mode == "flat_map":
-            yield from self.fn(element)
-        else:
-            if self.fn(element):
-                yield element
 
 
 # ---------------------------------------------------------------------------
@@ -287,34 +291,463 @@ def _lookup_side(view_by_window: dict, main_win, main_ts: float, default):
 
 
 # ---------------------------------------------------------------------------
-# PCollection
+# Fused element-wise stages (reference: the SDK worker runs each stage that
+# translations.greedily_fuse built as one bundle pass)
 # ---------------------------------------------------------------------------
 
 _ENVELOPE_META = ("event_time", "win_start", "win_end")
+_STATS = "__stats"  # marker-row column: [count, bytes] per step of a stage
+
+
+def _ddl(type_str: str | None) -> T.DataType:
+    """Declared Spark DDL type of a column; None → opaque pickled bytes."""
+    return T._parse_datatype_string(type_str) if type_str else T.BinaryType()
+
+
+def _envelope_schema(value_t: T.DataType, key_t: T.DataType | None = None) -> T.StructType:
+    fields = [T.StructField("value", value_t)]
+    fields += [T.StructField(c, T.DoubleType()) for c in _ENVELOPE_META]
+    if key_t is not None:
+        fields.insert(0, T.StructField("key", key_t))
+    return T.StructType(fields)
+
+
+@dataclass(frozen=True)
+class _Layout:
+    """How a PCollection's elements sit in its DataFrame's columns."""
+
+    keyed: bool
+    pickled: bool  # value column holds pickles (else a typed column)
+    key_pickled: bool
+    grouped: bool = False  # value column is an array (GBK output)
+    pairs: bool = False  # CoGBK join output: __l/__r arrays, no value column
+
+
+def _key_decode(k):
+    return _loads(k) if isinstance(k, (bytes, bytearray)) else _from_np(k)
+
+
+def _value_decoder(pickled: bool, grouped: bool) -> Callable:
+    one = _loads if pickled else _from_np
+    if grouped:
+        return lambda a: [] if a is None else [one(x) for x in a]
+    return one
+
+
+def _decode_batch(pdf: pd.DataFrame, src: _Layout, joined: dict):
+    """One Arrow batch → envelopes ``(element, ts, win_start, win_end)``
+    (a null window bound as None) and, when the stage reads
+    AsMultiMapJoined columns, each row's joined side views."""
+    if src.pairs:
+        side = _value_decoder(src.pickled, True)
+        vals = [(side(l), side(r)) for l, r in zip(pdf["__l"].tolist(), pdf["__r"].tolist())]
+    else:
+        vals = list(map(_value_decoder(src.pickled, src.grouped), pdf["value"].tolist()))
+    elems = list(zip(map(_key_decode, pdf["key"].tolist()), vals)) if src.keyed else vals
+    ws = [None if w != w else w for w in pdf["win_start"].tolist()]  # NaN → None
+    we = [None if w != w else w for w in pdf["win_end"].tolist()]
+    envs = list(zip(elems, pdf["event_time"].tolist(), ws, we))
+    if not joined:
+        return envs, None
+    keys = [e[0] for e in elems] if src.keyed else elems
+    views: list[dict] = [{} for _ in envs]
+    for name, (col, side_pickled) in joined.items():
+        dec = _value_decoder(side_pickled, True)
+        for view, key, side_vals in zip(views, keys, pdf[col].tolist()):
+            view[name] = _JoinedMultiMap(key, dec(side_vals))
+    return envs, views
+
+
+def _encode_values(values: Iterable, pickled: bool, grouped: bool) -> list:
+    if not pickled:
+        return list(values)
+    if grouped:
+        return [list(map(_dumps, v)) for v in values]
+    return list(map(_dumps, values))
+
+
+def _frame_encoder(layout: _Layout) -> Callable:
+    """Envelopes → a pandas frame of the layout's columns."""
+
+    def encode(envs: list) -> pd.DataFrame:
+        elems = list(map(_first, envs))
+        cols = {}
+        if layout.keyed:
+            cols["key"] = _encode_values([k for k, _ in elems], layout.key_pickled, False)
+            elems = [v for _, v in elems]
+        cols["value"] = _encode_values(elems, layout.pickled, layout.grouped)
+        for i, c in enumerate(_ENVELOPE_META, 1):  # None → NaN, no dtype inference
+            cols[c] = np.array(list(map(itemgetter(i), envs)), dtype=np.float64)
+        return pd.DataFrame(cols)
+
+    return encode
+
+
+def _row_encoder(layout: _Layout) -> Callable:
+    """Envelope → output row ``(key?, value, event_time, win_start, win_end)``."""
+
+    def enc(e, t, s, w):
+        key = ()
+        if layout.keyed:
+            k, e = e
+            key = (_dumps(k) if layout.key_pickled else k,)
+        return (*key, *_encode_values([e], layout.pickled, layout.grouped), t, s, w)
+
+    return enc
+
+
+class _DeadLetter:
+    """A failed element's pickled ``(element, error_repr)`` payload."""
+
+    __slots__ = ("payload",)
+
+    def __init__(self, payload: bytes):
+        self.payload = payload
+
+
+def _tagged_encoder(layout: _Layout, dead_letters: bool) -> Callable:
+    """Row encoder of a multi-output pass: the envelope row plus ``tag``
+    (and ``error_payload`` under exception_handling)."""
+    enc = _row_encoder(layout)
+    pad = (None,) if dead_letters else ()
+    blank = (None,) * (2 if layout.keyed else 1)
+
+    def enc_tagged(e, t, s, w) -> tuple:
+        if isinstance(e, _DeadLetter):
+            return blank + (t, s, w, "error", e.payload)
+        tag = None
+        if isinstance(e, TaggedOutput):
+            tag, e = e.tag, e.value
+            if dead_letters and tag == "error":
+                raise _ReservedTagError(
+                    "TaggedOutput tag 'error' is reserved by "
+                    "exception_handling for dead letters"
+                )
+        return enc(e, t, s, w) + (tag,) + pad
+
+    return enc_tagged
+
+
+def _value_size(value_t: T.DataType, pickled: bool, keyed: bool) -> Callable | None:
+    """Summed encoded size of a list of output envelopes' values, as
+    ``byte_counts`` reports it: pickle lengths, or the lengths of typed
+    string/binary values; None where no size is reported (other typed
+    values)."""
+    if not pickled and not isinstance(value_t, (T.StringType, T.BinaryType)):
+        return None
+
+    def total(envs: list) -> int:
+        values = map(_first, envs)
+        if keyed:
+            values = map(itemgetter(1), values)
+        if pickled:
+            return sum(map(len, map(_dumps, values)))
+        return sum(len(v) for v in values if v is not None)
+
+    return total
+
+
+class _Step:
+    """One element-wise transform of a fused stage. ``process`` maps a list
+    of envelopes to the list of its outputs. ``name`` is the output
+    PCollection whose element (and, with ``size``, byte) counts the stage
+    reports; None for transforms that report none. ``size`` sums the
+    encoded value sizes of a list of outputs.
+
+    The user callable is pickled when the step is built, as Beam's ParDo
+    does: driver state that changes after a transform is applied (a loop
+    variable, a DoFn attribute) does not reach it. Each step loads its own
+    copy in the worker, so a DoFn object applied twice is two instances."""
+
+    def __init__(self, fn, name: str | None = None, size: Callable | None = None):
+        self._fn_blob = cloudpickle.dumps(fn)
+        self.name, self.size = name, size
+
+    def setup(self):
+        self.fn = cloudpickle.loads(self._fn_blob)
+
+    def start_bundle(self):
+        pass
+
+    def process(self, envs: list, joined: list | None = None) -> list:
+        raise NotImplementedError
+
+    def finish_bundle(self) -> list:
+        return []
+
+    def teardown(self):
+        pass
+
+
+class _FnStep(_Step):
+    """A plain per-element function: no lifecycle, no side inputs."""
+
+    def __init__(self, kind: str, fn: Callable, name: str | None = None, size=None):
+        super().__init__(fn, name, size)
+        self.kind = kind
+
+    def process(self, envs, joined=None):
+        fn = self.fn
+        if self.kind == "map":
+            return [(fn(e), t, s, w) for e, t, s, w in envs]
+        if self.kind == "flat_map":
+            return [(o, t, s, w) for e, t, s, w in envs for o in fn(e)]
+        if self.kind == "filter":
+            return [env for env in envs if fn(env[0])]
+        if self.kind == "timestamp":
+            return [(e, float(fn(e)), s, w) for e, t, s, w in envs]
+        if self.kind == "kv_values":
+            return [((k, fn(v)), t, s, w) for (k, v), t, s, w in envs]
+        raise ValueError(f"unknown step kind {self.kind!r}")
+
+
+class _DoFnStep(_Step):
+    """A user DoFn (``fn``): Beam lifecycle, broadcast side inputs, the
+    joined side views of an AsMultiMapJoined input (first step of a stage
+    only) and the bundle finalizer. A single-output step emits envelopes,
+    TaggedOutput wrappers unwrapped. A multi-output step (``encode``, the
+    tagged row encoder) emits encoded rows, tag included; under
+    ``dead_letters`` an element's outputs are encoded inside its try, so a
+    failure anywhere in the element dead-letters it."""
+
+    def __init__(
+        self, dofn, name, size, side_views, side_empties, finalizer_acc,
+        encode: Callable | None = None, dead_letters: bool = False,
+    ):
+        super().__init__(dofn, name, size)
+        self.side_views, self.side_empties = side_views, side_empties
+        self.finalizer_acc = finalizer_acc  # None unless process takes bundle_finalizer
+        self.encode, self.dead_letters = encode, dead_letters
+
+    def setup(self):
+        super().setup()
+        self.fn.setup()
+
+    def start_bundle(self):
+        self.fn.start_bundle()
+        self._sides = {name: bc.value for name, bc in self.side_views.items()}
+        self._finalizer = BundleFinalizer() if self.finalizer_acc is not None else None
+        self._extra = {} if self._finalizer is None else {"bundle_finalizer": self._finalizer}
+
+    def _outputs(self, e, t, s, w, joined):
+        win = None if s is None else (s, w)
+        sides = {
+            name: _lookup_side(view, win, t, self.side_empties[name]())
+            for name, view in self._sides.items()
+        }
+        if joined:
+            sides.update(joined)
+        return self.fn.process(e, timestamp=t, window=win, **self._extra, **sides) or ()
+
+    def _emit(self, o, t, s, w):
+        if self.encode is not None:
+            return self.encode(o, t, s, w)
+        return (o.value if isinstance(o, TaggedOutput) else o, t, s, w)
+
+    def process(self, envs, joined=None):
+        out: list = []
+        for i, (e, t, s, w) in enumerate(envs):
+            row_sides = joined[i] if joined else None
+            if not self.dead_letters:
+                out += [self._emit(o, t, s, w) for o in self._outputs(e, t, s, w, row_sides)]
+                continue
+            try:
+                rows = [self._emit(o, t, s, w) for o in self._outputs(e, t, s, w, row_sides)]
+            except _ReservedTagError:
+                raise  # misuse of the API, never a dead letter
+            except Exception as ex:  # noqa: BLE001 - dead-letter route
+                rows = [self.encode(_DeadLetter(_dumps((e, repr(ex)))), t, s, w)]
+            out += rows
+        return out
+
+    def finish_bundle(self):
+        return [self._emit(o, GLOBAL_TS, None, None) for o in self.fn.finish_bundle() or ()]
+
+    def teardown(self):
+        if self._finalizer is not None and self._finalizer._callbacks:
+            # ship the registered callbacks to the driver; accumulator
+            # updates surface only when the carrying job commits.
+            # Callbacks run DRIVER-side so they must be picklable; an
+            # unpicklable one (closing over a socket/file handle) is
+            # dropped here rather than failing the task — finalization
+            # is best-effort per the Beam contract.
+            blobs = []
+            for cb in self._finalizer._callbacks:
+                try:
+                    blobs.append(cloudpickle.dumps(cb))
+                except Exception:  # noqa: BLE001 - best-effort drop
+                    pass
+            if blobs:
+                self.finalizer_acc.add(blobs)
+        self.fn.teardown()
+
+
+def _run_stage(batches, steps, src, joined, encode, columns, stats):
+    """Run a fused stage over one bundle (one task's Arrow batches): decode
+    each element once, pass plain Python objects from step to step, encode
+    once at the output. Lifecycle order is Beam's bundle processor's:
+    consumers set up and start first, producers finish first, so a step's
+    finish_bundle outputs flow through the later steps before those
+    finish. With ``stats``, a last marker row carries each step's
+    [element count, byte count] for the stage's Observation."""
+    for st in reversed(steps):
+        st.setup()
+    for st in reversed(steps):
+        st.start_bundle()
+    tally = [0] * (2 * len(steps))
+
+    def push(envs, first, joined_rows=None):
+        for i in range(first, len(steps)):
+            envs = steps[i].process(envs, joined_rows if i == 0 else None)
+            count(i, envs)
+        return envs
+
+    def count(i, envs):
+        st = steps[i]
+        if stats and st.name is not None:
+            tally[2 * i] += len(envs)
+            if st.size is not None:
+                tally[2 * i + 1] += st.size(envs)
+
+    def frame(envs):
+        pdf = encode(envs)
+        if stats:
+            pdf[_STATS] = None
+        return pdf
+
+    for pdf in batches:
+        envs, joined_rows = _decode_batch(pdf, src, joined)
+        out = push(envs, 0, joined_rows)
+        if out:
+            yield frame(out)
+    tail: list = []
+    for i, st in enumerate(steps):
+        fin = st.finish_bundle()
+        count(i, fin)
+        tail += push(fin, i + 1)
+    if tail:
+        yield frame(tail)
+    if stats:
+        yield pd.DataFrame({**{c: [None] for c in columns}, _STATS: [tally]})
+    for st in steps:
+        st.teardown()
+
+
+class _Stage:
+    """A chain of element-wise steps over one input DataFrame (Beam's fused
+    stage). It runs as ONE mapInPandas pass, built the first time its
+    PCollection's ``df`` is needed. ``joined`` names the AsMultiMapJoined
+    columns of ``base`` that the first step reads."""
+
+    def __init__(self, base: DataFrame, src: _Layout, steps: tuple = (), joined=None):
+        self.base, self.src, self.steps, self.joined = base, src, steps, joined or {}
+
+    def then(self, step: _Step) -> "_Stage":
+        return _Stage(self.base, self.src, self.steps + (step,), self.joined)
+
+    def map_in_pandas(self, schema: T.StructType, encode: Callable, stats: bool = False):
+        """``encode`` turns a list of the last step's outputs (envelopes, or
+        a multi-output step's encoded rows) into a pandas frame of
+        ``schema``'s columns."""
+        columns = schema.fieldNames()
+        if stats:
+            schema = T.StructType([*schema.fields, T.StructField(_STATS, T.ArrayType(T.LongType()))])
+        # The steps (their user code already pickled, their broadcast side
+        # views not) pickle with mapInPandas's command, so the broadcasts
+        # ship with it.
+        steps, src, joined = self.steps, self.src, self.joined
+
+        def kernel(batches: Iterable[pd.DataFrame]) -> Iterable[pd.DataFrame]:
+            return _run_stage(batches, steps, src, joined, encode, columns, stats)
+
+        return self.base.mapInPandas(kernel, schema=schema)
+
+
+# ---------------------------------------------------------------------------
+# PCollection
+# ---------------------------------------------------------------------------
 
 
 class PCollection:
     """A distributed collection: DataFrame + envelope metadata.
 
     ``df`` columns: [key?, value, event_time, win_start, win_end].
-    ``pickled``: whether value (and key) are opaque pickled bytes.
-    ``windowing``: the WindowFn in effect (merging fns apply at GBK)."""
+    ``layout``: how elements sit in those columns (``keyed``, ``pickled``,
+    ``key_pickled``, ``grouped``, each also readable as an attribute).
+    ``windowing``: the WindowFn in effect (merging fns apply at GBK).
+
+    An element-wise Python transform returns a PCollection whose ``df``
+    is pending: it holds its parent's stage extended by one step, and
+    the whole chain becomes one mapInPandas the first time ``df`` is
+    read (GBK, combine, collect, to_dataframe, window_into, a side-input
+    view, a join, ...)."""
 
     def __init__(
         self,
         pipeline: "Pipeline",
-        df: DataFrame,
+        df: DataFrame | None,
         keyed: bool,
         pickled: bool,
         windowing=None,
         grouped: bool = False,
+        *,
+        key_pickled: bool | None = None,
+        stage: _Stage | None = None,
+        schema: T.StructType | None = None,
     ):
         self.pipeline = pipeline
-        self.df = df
-        self.keyed = keyed
-        self.pickled = pickled
+        self._df = df
+        self._stage = stage
+        self._schema = schema
+        self.layout = _Layout(keyed, pickled, pickled if key_pickled is None else key_pickled, grouped)
         self.windowing = windowing or GlobalWindows()
-        self.grouped = grouped  # value is array<...> from GBK
+
+    keyed = property(lambda self: self.layout.keyed)
+    pickled = property(lambda self: self.layout.pickled)
+    key_pickled = property(lambda self: self.layout.key_pickled)
+    grouped = property(lambda self: self.layout.grouped)  # value is array<...> from GBK
+
+    @property
+    def df(self) -> DataFrame:
+        if self._df is None:
+            self._df = self._materialize()
+        return self._df
+
+    @df.setter
+    def df(self, df: DataFrame):
+        self._df, self._stage = df, None
+
+    @property
+    def schema(self) -> T.StructType:
+        """The df's schema, without building a pending stage."""
+        return self._schema if self._df is None else self._df.schema
+
+    def _envelope(self) -> T.StructType:
+        """This collection's schema in envelope column order."""
+        s = self.schema
+        return _envelope_schema(s["value"].dataType, s["key"].dataType if self.keyed else None)
+
+    def _materialize(self) -> DataFrame:
+        """The pending stage as one mapInPandas, its marker rows summed by
+        one Observation and then dropped."""
+        stage = self._stage
+        stats = not stage.base.isStreaming and any(st.name for st in stage.steps)
+        df = stage.map_in_pandas(self._schema, _frame_encoder(self.layout), stats)
+        if not stats:
+            return df
+        df = self.pipeline._observe_stage(df, stage.steps)
+        return df.filter(F.col(_STATS).isNull()).drop(_STATS)
+
+    def _then(self, step, keyed, pickled, key_pickled, schema, grouped=False) -> "PCollection":
+        """A pending PCollection: this one's stage (or a new stage over its
+        df) extended by ``step``; None re-lays out the same elements."""
+        stage = self._stage or _Stage(self.df, self.layout)
+        if step is not None:
+            stage = stage.then(step)
+        return PCollection(
+            self.pipeline, None, keyed, pickled, self.windowing, grouped,
+            key_pickled=key_pickled, stage=stage, schema=schema,
+        )
 
     # -- element-wise (ParDo family) ------------------------------------
 
@@ -337,6 +770,11 @@ class PCollection:
         column (typed via ``key_type``, else pickled) so every downstream
         keyed op (group_by_key, map_kv_values, ...) sees the schema it
         expects.
+
+        A single-output ParDo with only broadcast side inputs fuses into
+        its input's stage. Multi-output and exception_handling ParDos
+        run their own persisted pass, and an AsMultiMapJoined side input
+        starts a new stage over the join.
 
         ``exception_handling`` (Beam's ``with_exception_handling`` /
         dead-letter pattern): a per-element exception no longer fails the
@@ -364,7 +802,6 @@ class PCollection:
             for name, view in bc_sides.items()
         }
         side_empties = {name: type(view).empty for name, view in bc_sides.items()}
-        keyed_in, pickled_in, grouped_in = self.keyed, self.pickled, self.grouped
 
         # Join-based large-side path: aggregate the side per key, join it
         # onto the main input (broadcast by default), and let the kernel
@@ -372,7 +809,7 @@ class PCollection:
         # materialization, no size cap. Keys must compare equal on their
         # stored representation (typed columns, or deterministic pickles
         # for opaque keys — same assumption group_by_key already makes).
-        in_df = self.df
+        joined_df = None
         joined_meta: dict[str, tuple[str, bool]] = {}
         for name, view in joined_sides.items():
             col = f"side__{name}"
@@ -380,9 +817,9 @@ class PCollection:
             # the join compares stored representations — a typed main
             # against a pickled side (or differing dtypes) would compile
             # via implicit casts and silently match nothing
-            main_join_col = "key" if keyed_in else "value"
-            main_dtype = dict(self.df.dtypes)[main_join_col]
-            side_dtype = dict(view.pcoll.df.dtypes)["key"]
+            main_join_col = "key" if self.keyed else "value"
+            main_dtype = self.schema[main_join_col].dataType.simpleString()
+            side_dtype = view.pcoll.schema["key"].dataType.simpleString()
             if main_dtype != side_dtype:
                 raise ValueError(
                     f"AsMultiMapJoined key type mismatch for side input "
@@ -399,223 +836,122 @@ class PCollection:
             )
             if view.broadcast:
                 sdf = F.broadcast(sdf)
-            join_key = F.col("key") if keyed_in else F.col("value")
-            in_df = in_df.join(sdf, join_key.eqNullSafe(F.col(skey)), "left").drop(skey)
+            join_key = F.col("key") if self.keyed else F.col("value")
+            joined_df = (self.df if joined_df is None else joined_df).join(
+                sdf, join_key.eqNullSafe(F.col(skey)), "left"
+            ).drop(skey)
             joined_meta[name] = (col, view.pcoll.pickled)
         wants_finalizer = "bundle_finalizer" in inspect.signature(dofn.process).parameters
-        finalizer_acc = self.pipeline._finalizer_acc if wants_finalizer else None
         out_keyed = bool(keyed_output)
         out_pickled = output_type is None
-        key_pickled = key_type is None
-        value_type = T._parse_datatype_string(output_type) if output_type else T.BinaryType()
-        fields = [
-            T.StructField("value", value_type),
-            T.StructField("event_time", T.DoubleType()),
-            T.StructField("win_start", T.DoubleType()),
-            T.StructField("win_end", T.DoubleType()),
-            T.StructField("tag", T.StringType()),
-        ]
-        if out_keyed:
-            k_t = T._parse_datatype_string(key_type) if key_type else T.BinaryType()
-            fields.insert(0, T.StructField("key", k_t))
+        key_pickled = (key_type is None) if out_keyed else None
+        value_t = _ddl(output_type)
+        schema = _envelope_schema(value_t, _ddl(key_type) if out_keyed else None)
+        name = self.pipeline._next_label("ParDo", label)
+        tagged = bool(outputs) or exception_handling
+        out_layout = _Layout(out_keyed, out_pickled, bool(key_pickled))
+        step = _DoFnStep(
+            dofn,
+            f"{name}.out",
+            _value_size(value_t, out_pickled, out_keyed),
+            side_views,
+            side_empties,
+            self.pipeline._finalizer_acc if wants_finalizer else None,
+            encode=_tagged_encoder(out_layout, exception_handling) if tagged else None,
+            dead_letters=exception_handling,
+        )
+
+        def child(df):
+            return PCollection(
+                self.pipeline, df, out_keyed, out_pickled, self.windowing, key_pickled=key_pickled
+            )
+
+        if not tagged:
+            if joined_meta:
+                stage = _Stage(joined_df, self.layout, (step,), joined_meta)
+                return PCollection(
+                    self.pipeline, None, out_keyed, out_pickled, self.windowing,
+                    key_pickled=key_pickled, stage=stage, schema=schema,
+                )
+            return self._then(step, out_keyed, out_pickled, key_pickled, schema)
+
+        fields = [*schema.fields, T.StructField("tag", T.StringType())]
         if exception_handling:
             # dead letters carry a pickled (element, error) payload in a
             # dedicated column — the value column keeps its declared type
             fields.append(T.StructField("error_payload", T.BinaryType()))
-        schema = T.StructType(fields)
+        base = self.df if joined_df is None else joined_df
+        stage = _Stage(base, self.layout, (step,), joined_meta)
+        # Persist so N tagged views cost one DoFn pass (required for
+        # correctness with nondeterministic/metric-bearing DoFns).
+        # Tracked on the pipeline: call Pipeline.release() when done.
         columns = [f.name for f in fields]
-        n_cols = len(columns)
+        out_df = stage.map_in_pandas(
+            T.StructType(fields), lambda rows: pd.DataFrame(rows, columns=columns)
+        ).persist()
+        self.pipeline._persisted.append(out_df)
+        observe = self.pipeline._observe_elements
 
-        def kernel(batches: Iterable[pd.DataFrame]) -> Iterable[pd.DataFrame]:
-            dofn.setup()
-            dofn.start_bundle()
-            sides = {name: bc.value for name, bc in side_views.items()}
-            bundle_finalizer = BundleFinalizer() if wants_finalizer else None
-            extra_params = (
-                {"bundle_finalizer": bundle_finalizer} if wants_finalizer else {}
+        def tag_view(df):
+            return df.drop("error_payload") if exception_handling else df
+
+        result = {
+            "main": child(
+                observe(
+                    f"{name}.out",
+                    tag_view(out_df.filter(F.col("tag").isNull()).drop("tag")),
+                )
             )
-
-            pad = (None,) if exception_handling else ()
-
-            def emit_rows(outs, ts, ws, we, rows):
-                for out in outs:
-                    tag, val = (
-                        (out.tag, out.value) if isinstance(out, TaggedOutput) else (None, out)
-                    )
-                    if exception_handling and tag == "error":
-                        raise _ReservedTagError(
-                            "TaggedOutput tag 'error' is reserved by "
-                            "exception_handling for dead letters"
-                        )
-                    if out_keyed:
-                        k, v = val
-                        rows.append(
-                            (
-                                _dumps(k) if key_pickled else k,
-                                _dumps(v) if out_pickled else v,
-                                ts,
-                                ws,
-                                we,
-                                tag,
-                            )
-                            + pad
-                        )
-                    else:
-                        rows.append(
-                            (
-                                _dumps(val) if out_pickled else val,
-                                ts,
-                                ws,
-                                we,
-                                tag,
-                            )
-                            + pad
-                        )
-
-            for pdf in batches:
-                rows: list = []
-                for row in pdf.itertuples(index=False):
-                    d = row._asdict()
-                    elem = _decode_element(d, keyed_in, pickled_in, grouped_in)
-                    ts = d["event_time"]
-                    win = None if pd.isna(d["win_start"]) else (d["win_start"], d["win_end"])
-                    bound_sides = {
-                        name: _lookup_side(view, win, ts, side_empties[name]())
-                        for name, view in sides.items()
-                    }
-                    for name, (col, side_pickled) in joined_meta.items():
-                        vals = d.get(col)
-                        vals = (
-                            []
-                            if vals is None
-                            else [_loads(x) if side_pickled else _from_np(x) for x in vals]
-                        )
-                        jk = elem[0] if keyed_in else elem
-                        bound_sides[name] = _JoinedMultiMap(jk, vals)
-                    if exception_handling:
-                        elem_rows: list = []
-                        try:
-                            outs = dofn.process(
-                                elem, timestamp=ts, window=win, **extra_params, **bound_sides
-                            )
-                            emit_rows(outs, ts, d["win_start"], d["win_end"], elem_rows)
-                        except _ReservedTagError:
-                            raise  # misuse of the API, never a dead letter
-                        except Exception as e:  # noqa: BLE001 - dead-letter route
-                            payload = _dumps((elem, repr(e)))
-                            err_row = [None] * n_cols
-                            err_row[-5:] = [ts, d["win_start"], d["win_end"], "error", payload]
-                            rows.append(tuple(err_row))
-                        else:
-                            rows.extend(elem_rows)
-                    else:
-                        outs = dofn.process(
-                            elem, timestamp=ts, window=win, **extra_params, **bound_sides
-                        )
-                        emit_rows(outs, ts, d["win_start"], d["win_end"], rows)
-                yield pd.DataFrame(rows, columns=columns)
-            final_rows: list = []
-            emit_rows(dofn.finish_bundle() or (), GLOBAL_TS, None, None, final_rows)
-            if final_rows:
-                yield pd.DataFrame(final_rows, columns=columns)
-            if wants_finalizer and bundle_finalizer._callbacks:
-                # ship the registered callbacks to the driver; accumulator
-                # updates surface only when the carrying job commits.
-                # Callbacks run DRIVER-side so they must be picklable; an
-                # unpicklable one (closing over a socket/file handle) is
-                # dropped here rather than failing the task — finalization
-                # is best-effort per the Beam contract.
-                from pyspark import cloudpickle
-
-                blobs = []
-                for cb in bundle_finalizer._callbacks:
-                    try:
-                        blobs.append(cloudpickle.dumps(cb))
-                    except Exception:  # noqa: BLE001 - best-effort drop
-                        pass
-                if blobs:
-                    finalizer_acc.add(blobs)
-            dofn.teardown()
-
-        out_df = in_df.mapInPandas(kernel, schema=schema)
-        name = self.pipeline._next_label("ParDo", label)
-
-        def child(df):
-            pc = self._child(df, out_keyed, out_pickled)
-            if out_keyed:
-                pc.key_pickled = key_pickled
-            return pc
-
-        if outputs or exception_handling:
-            # Persist so N tagged views cost one DoFn pass (required for
-            # correctness with nondeterministic/metric-bearing DoFns).
-            # Tracked on the pipeline: call Pipeline.release() when done.
-            out_df = out_df.persist()
-            self.pipeline._persisted.append(out_df)
-            observe = self.pipeline._observe_elements
-
-            def tag_view(df):
-                return df.drop("error_payload") if exception_handling else df
-
-            result = {
-                "main": child(
-                    observe(
-                        f"{name}.out",
-                        tag_view(out_df.filter(F.col("tag").isNull()).drop("tag")),
-                    )
+        }
+        for tag in outputs:
+            result[tag] = child(
+                observe(
+                    f"{name}.out.{tag}",
+                    tag_view(out_df.filter(F.col("tag") == tag).drop("tag")),
                 )
-            }
-            for tag in outputs:
-                result[tag] = child(
-                    observe(
-                        f"{name}.out.{tag}",
-                        tag_view(out_df.filter(F.col("tag") == tag).drop("tag")),
-                    )
-                )
-            if exception_handling:
-                err_df = out_df.filter(
-                    (F.col("tag") == "error") & F.col("error_payload").isNotNull()
-                ).select(F.col("error_payload").alias("value"), *_ENVELOPE_META)
-                result["error"] = PCollection(
-                    self.pipeline,
-                    observe(f"{name}.out.error", err_df),
-                    False,
-                    True,
-                    self.windowing,
-                )
-            return result
-        return child(self.pipeline._observe_elements(f"{name}.out", out_df.drop("tag")))
+            )
+        if exception_handling:
+            err_df = out_df.filter(
+                (F.col("tag") == "error") & F.col("error_payload").isNotNull()
+            ).select(F.col("error_payload").alias("value"), *_ENVELOPE_META)
+            result["error"] = PCollection(
+                self.pipeline,
+                observe(f"{name}.out.error", err_df),
+                False,
+                True,
+                self.windowing,
+            )
+        return result
 
     def _child(self, df: DataFrame, keyed: bool, pickled: bool, grouped: bool = False):
-        return PCollection(self.pipeline, df, keyed, pickled, self.windowing, grouped)
+        return PCollection(
+            self.pipeline, df, keyed, pickled, self.windowing, grouped,
+            key_pickled=self.key_pickled if keyed else None,
+        )
+
+    def _fn(self, kind: str, fn: Callable, output_type: str | None) -> "PCollection":
+        """A ParDo of a plain function (labelled and counted as one),
+        without the DoFn lifecycle and side-input machinery."""
+        name = self.pipeline._next_label("ParDo", None)
+        value_t = _ddl(output_type)
+        pickled = output_type is None
+        step = _FnStep(kind, fn, f"{name}.out", _value_size(value_t, pickled, False))
+        return self._then(step, False, pickled, None, _envelope_schema(value_t))
 
     def map(self, fn: Callable, output_type: str | None = None) -> "PCollection":
-        return self.par_do(_FnDoFn(fn, "map"), output_type)
+        return self._fn("map", fn, output_type)
 
     def flat_map(self, fn: Callable, output_type: str | None = None) -> "PCollection":
-        return self.par_do(_FnDoFn(fn, "flat_map"), output_type)
+        return self._fn("flat_map", fn, output_type)
 
     def filter(self, fn: Callable) -> "PCollection":
-        """Keep elements where fn(element) is truthy. Identity transform —
-        a dedicated pass-through kernel preserves the whole envelope
-        (including the key column for keyed PCollections, which par_do's
-        value-only output schema would drop)."""
-        keyed, pickled, grouped = self.keyed, self.pickled, self.grouped
-
-        def kernel(batches):
-            for pdf in batches:
-                mask = [
-                    bool(fn(_decode_element(row._asdict(), keyed, pickled, grouped)))
-                    for row in pdf.itertuples(index=False)
-                ]
-                out = pdf[pd.Series(mask, index=pdf.index)]
-                if len(out):
-                    yield out
-
-        df = self.df.mapInPandas(kernel, schema=self.df.schema)
-        out = self._child(df, keyed, pickled, grouped)
-        out.key_pickled = getattr(self, "key_pickled", pickled)
-        return out
+        """Keep elements where fn(element) is truthy. Identity transform:
+        the whole envelope is kept, including the key of a keyed
+        PCollection and the lists of a grouped one."""
+        return self._then(
+            _FnStep("filter", fn), self.keyed, self.pickled, self.key_pickled,
+            self._envelope(), self.grouped,
+        )
 
     def select_expr(self, *exprs: str) -> "PCollection":
         """Typed fast path: transform the value with SQL expressions over a
@@ -634,41 +970,11 @@ class PCollection:
         return pc._split_kv(key_type, value_type)
 
     def _split_kv(self, key_type: str | None, value_type: str | None) -> "PCollection":
+        """Re-lay out pickled (key, value) tuples as key and value columns:
+        no step of its own, only the stage's output encoding changes."""
         assert self.pickled and not self.keyed
-        k_t = T._parse_datatype_string(key_type) if key_type else T.BinaryType()
-        v_t = T._parse_datatype_string(value_type) if value_type else T.BinaryType()
-        schema = T.StructType(
-            [
-                T.StructField("key", k_t),
-                T.StructField("value", v_t),
-                T.StructField("event_time", T.DoubleType()),
-                T.StructField("win_start", T.DoubleType()),
-                T.StructField("win_end", T.DoubleType()),
-            ]
-        )
-        kp, vp = key_type is None, value_type is None
-
-        def kernel(batches):
-            for pdf in batches:
-                rows = []
-                for row in pdf.itertuples(index=False):
-                    d = row._asdict()
-                    k, v = _loads(d["value"])
-                    rows.append(
-                        (
-                            _dumps(k) if kp else k,
-                            _dumps(v) if vp else v,
-                            d["event_time"],
-                            d["win_start"],
-                            d["win_end"],
-                        )
-                    )
-                yield pd.DataFrame(rows, columns=["key", "value", "event_time", "win_start", "win_end"])
-
-        df = self.df.mapInPandas(kernel, schema=schema)
-        out = self._child(df, True, vp)
-        out.key_pickled = kp
-        return out
+        schema = _envelope_schema(_ddl(value_type), _ddl(key_type))
+        return self._then(None, True, value_type is None, key_type is None, schema)
 
     # -- windowing --------------------------------------------------------
 
@@ -712,23 +1018,17 @@ class PCollection:
             df = self.df.withColumn("win_start", F.lit(None).cast("double")).withColumn(
                 "win_end", F.lit(None).cast("double")
             )
-        return PCollection(self.pipeline, df, self.keyed, self.pickled, windowfn, self.grouped)
+        return PCollection(
+            self.pipeline, df, self.keyed, self.pickled, windowfn, self.grouped,
+            key_pickled=self.key_pickled,
+        )
 
     def with_timestamps(self, fn: Callable) -> "PCollection":
         """Set event_time per element (Beam TimestampedValue)."""
-        keyed, pickled, grouped = self.keyed, self.pickled, self.grouped
-
-        def kernel(batches):
-            for pdf in batches:
-                out = pdf.copy()
-                ts = [
-                    float(fn(_decode_element(row._asdict(), keyed, pickled, grouped)))
-                    for row in pdf.itertuples(index=False)
-                ]
-                out["event_time"] = ts
-                yield out
-
-        return self._child(self.df.mapInPandas(kernel, schema=self.df.schema), keyed, pickled, grouped)
+        return self._then(
+            _FnStep("timestamp", fn), self.keyed, self.pickled, self.key_pickled,
+            self._envelope(), self.grouped,
+        )
 
     # -- grouping ----------------------------------------------------------
 
@@ -750,11 +1050,12 @@ class PCollection:
         grouped = self.pipeline._observe_elements(
             self.pipeline._next_label("GroupByKey", None) + ".out", grouped
         )
-        out = PCollection(self.pipeline, grouped, True, self.pickled, wfn, grouped=True)
         # typed keys stay typed downstream (.keys() would otherwise try to
         # unpickle them)
-        out.key_pickled = getattr(self, "key_pickled", self.pickled)
-        return out
+        return PCollection(
+            self.pipeline, grouped, True, self.pickled, wfn, grouped=True,
+            key_pickled=self.key_pickled,
+        )
 
     def _gbk_merging(self, wfn) -> "PCollection":
         schema = T.StructType(
@@ -791,9 +1092,9 @@ class PCollection:
             return pd.DataFrame(rows, columns=["key", "value", "event_time", "win_start", "win_end"])
 
         df = self.df.groupBy("key").applyInPandas(merge_group, schema=schema)
-        out = PCollection(self.pipeline, df, True, self.pickled, wfn, grouped=True)
-        out.key_pickled = getattr(self, "key_pickled", self.pickled)
-        return out
+        return PCollection(
+            self.pipeline, df, True, self.pickled, wfn, grouped=True, key_pickled=self.key_pickled
+        )
 
     def kv_to_tuples(self) -> "PCollection":
         """Re-view a keyed PCollection as unkeyed (k, v) tuple values
@@ -801,11 +1102,11 @@ class PCollection:
         Flatten/CoGBK, mirroring the reference's coder transcoding."""
         if not self.keyed:
             raise ValueError("kv_to_tuples requires a keyed PCollection")
-        return self.par_do(_FnDoFn(lambda e: e, "map"), None)
+        return self.map(lambda e: e)
 
     def _as_opaque_kv(self) -> "PCollection":
         """Normalize to pickled key + pickled value representation."""
-        if self.pickled and getattr(self, "key_pickled", self.pickled):
+        if self.pickled and self.key_pickled:
             return self
         return self.kv_to_tuples()._split_kv(None, None)
 
@@ -821,18 +1122,16 @@ class PCollection:
         if not (self.keyed and other.keyed):
             raise ValueError("co_group_by_key requires keyed PCollections")
         l, r = self, other
-        lkp = getattr(l, "key_pickled", l.pickled)
-        rkp = getattr(r, "key_pickled", r.pickled)
-        same_key_type = l.df.schema["key"].dataType == r.df.schema["key"].dataType
-        if l.pickled != r.pickled or lkp != rkp or not same_key_type:
+        same_key_type = l.schema["key"].dataType == r.schema["key"].dataType
+        if l.pickled != r.pickled or l.key_pickled != r.key_pickled or not same_key_type:
             l, r = l._as_opaque_kv(), r._as_opaque_kv()
         if getattr(self.windowing, "merging", False):
             lt = l.map_kv_values(lambda v: ("l", v))
             rt = r.map_kv_values(lambda v: ("r", v))
             u = PCollection(
-                self.pipeline, lt.df.unionByName(rt.df), True, True, self.windowing
+                self.pipeline, lt.df.unionByName(rt.df), True, True, self.windowing,
+                key_pickled=lt.key_pickled,
             )
-            u.key_pickled = getattr(lt, "key_pickled", True)
             grouped = u.group_by_key()
             return grouped.map_kv_values(
                 lambda vs: (
@@ -873,43 +1172,14 @@ class PCollection:
             F.coalesce(adf["win_start"], bdf["__bws"]).alias("win_start"),
             F.coalesce(adf["win_end"], bdf["__bwe"]).alias("win_end"),
         )
-        out = PCollection(self.pipeline, j, True, l.pickled, self.windowing, grouped=False)
-        out.key_pickled = getattr(l, "key_pickled", l.pickled)
-        return out._to_pair_values()
-
-    def _to_pair_values(self) -> "PCollection":
-        """Internal: fold (__l, __r) array columns into a pickled tuple
-        value so downstream ParDos see ([left...], [right...])."""
-        pickled = self.pickled
-
-        def kernel(batches):
-            for pdf in batches:
-                rows = []
-                # no itertuples: pandas renames __-prefixed fields positionally
-                for k, l, r, ts, ws, we in zip(
-                    pdf["key"], pdf["__l"], pdf["__r"], pdf["event_time"], pdf["win_start"], pdf["win_end"]
-                ):
-                    lv = [(_loads(x) if pickled else _from_np(x)) for x in (l if l is not None else [])]
-                    rv = [(_loads(x) if pickled else _from_np(x)) for x in (r if r is not None else [])]
-                    rows.append((k, _dumps((lv, rv)), ts, ws, we))
-                yield pd.DataFrame(
-                    rows, columns=["key", "value", "event_time", "win_start", "win_end"]
-                )
-
-        schema = T.StructType(
-            [
-                T.StructField("key", self.df.schema["key"].dataType),
-                T.StructField("value", T.BinaryType()),
-                T.StructField("event_time", T.DoubleType()),
-                T.StructField("win_start", T.DoubleType()),
-                T.StructField("win_end", T.DoubleType()),
-            ]
+        # A stage over the join folds (__l, __r) into one pickled
+        # ([left...], [right...]) value; downstream ParDos fuse onto it.
+        return PCollection(
+            self.pipeline, None, True, True, self.windowing,
+            key_pickled=l.key_pickled,
+            stage=_Stage(j, _Layout(True, l.pickled, l.key_pickled, pairs=True)),
+            schema=_envelope_schema(T.BinaryType(), j.schema["key"].dataType),
         )
-        out = PCollection(
-            self.pipeline, self.df.mapInPandas(kernel, schema=schema), True, True, self.windowing
-        )
-        out.key_pickled = getattr(self, "key_pickled", False)
-        return out
 
     def combine_per_key(self, spec) -> "PCollection":
         """Per-key combiner. ``spec`` ∈ {'sum','min','max','mean','count'}
@@ -938,48 +1208,14 @@ class PCollection:
             .agg(exprs[spec].alias("value"), F.max("event_time").alias("event_time"))
             .select("key", "value", "event_time", "win_start", "win_end")
         )
-        out = PCollection(self.pipeline, df, True, False, wfn)
-        out.key_pickled = getattr(self, "key_pickled", self.pickled)
-        return out
+        return PCollection(self.pipeline, df, True, False, wfn, key_pickled=self.key_pickled)
 
     def map_kv_values(self, fn: Callable, output_type: str | None = None) -> "PCollection":
         """Map over values of a keyed PCollection, keeping keys."""
-        keyed, pickled, grouped = self.keyed, self.pickled, self.grouped
-        out_pickled = output_type is None
-        v_t = T._parse_datatype_string(output_type) if output_type else T.BinaryType()
-        schema = T.StructType(
-            [
-                T.StructField("key", self.df.schema["key"].dataType),
-                T.StructField("value", v_t),
-                T.StructField("event_time", T.DoubleType()),
-                T.StructField("win_start", T.DoubleType()),
-                T.StructField("win_end", T.DoubleType()),
-            ]
+        schema = _envelope_schema(_ddl(output_type), self.schema["key"].dataType)
+        return self._then(
+            _FnStep("kv_values", fn), True, output_type is None, self.key_pickled, schema
         )
-
-        def kernel(batches):
-            for pdf in batches:
-                rows = []
-                for row in pdf.itertuples(index=False):
-                    d = row._asdict()
-                    _, v = _decode_element(d, keyed, pickled, grouped)
-                    res = fn(v)
-                    rows.append(
-                        (
-                            d["key"],
-                            _dumps(res) if out_pickled else res,
-                            d["event_time"],
-                            d["win_start"],
-                            d["win_end"],
-                        )
-                    )
-                yield pd.DataFrame(rows, columns=["key", "value", "event_time", "win_start", "win_end"])
-
-        out = PCollection(
-            self.pipeline, self.df.mapInPandas(kernel, schema=schema), True, out_pickled, self.windowing
-        )
-        out.key_pickled = getattr(self, "key_pickled", self.pickled)
-        return out
 
     def combine_globally(self, spec) -> "PCollection":
         """CombineGlobally (reference tests ray_runner_test.py:1133-1161).
@@ -1014,8 +1250,7 @@ class PCollection:
 
     def keys(self) -> "PCollection":
         df = self.df.select(F.col("key").alias("value"), *_ENVELOPE_META)
-        out = self._child(df, False, getattr(self, "key_pickled", self.pickled))
-        return out
+        return self._child(df, False, self.key_pickled)
 
     def values(self) -> "PCollection":
         df = self.df.select("value", *_ENVELOPE_META)
@@ -1032,7 +1267,7 @@ class PCollection:
         values first (consistently, regardless of type homogeneity), so
         flattening KV collections never silently drops keys."""
         pcs = [pc.kv_to_tuples() if pc.keyed else pc for pc in [self, *others]]
-        types = {pc.df.schema["value"].dataType.simpleString() for pc in pcs}
+        types = {pc.schema["value"].dataType.simpleString() for pc in pcs}
         hetero = len(types) > 1 or any(pc.pickled for pc in pcs) != all(pc.pickled for pc in pcs)
         if hetero:
             pcs = [pc if pc.pickled else pc.map(lambda x: x) for pc in pcs]
@@ -1070,7 +1305,6 @@ class PCollection:
         return self.df
 
     def _collect_windowed(self, limit: int | None = None, what: str = "PCollection"):
-        keyed, pickled, grouped = self.keyed, self.pickled, self.grouped
         src = self.df if limit is None else self.df.limit(limit + 1)
         collected = src.collect()
         if limit is not None and len(collected) > limit:
@@ -1081,10 +1315,13 @@ class PCollection:
                 f"driver memory, or switch to the join-based AsMultiMapJoined "
                 f"view, which never leaves the executors"
             )
+        decode = _value_decoder(self.pickled, self.grouped)
         rows = []
         for r in collected:
             d = r.asDict(recursive=True)
-            elem = _decode_element(d, keyed, pickled, grouped, from_row=True)
+            elem = decode(d["value"])
+            if self.keyed:
+                elem = (_key_decode(d["key"]), elem)
             win = None if d.get("win_start") is None else (d["win_start"], d["win_end"])
             rows.append((elem, d["event_time"], win))
         self.pipeline.run_finalizers()  # post-commit bundle finalization
@@ -1114,26 +1351,8 @@ def _canon(e):
     return e
 
 
-def _decode_element(d: dict, keyed: bool, pickled: bool, grouped: bool, from_row: bool = False):
-    v = d["value"]
-    if grouped:
-        vals = list(v) if v is not None else []
-        v = [_loads(x) if pickled else _from_np(x) for x in vals]
-    elif pickled:
-        v = _loads(v)
-    else:
-        v = _from_np(v)
-    if keyed:
-        k = d["key"]
-        k = _loads(k) if isinstance(k, (bytes, bytearray)) else _from_np(k)
-        return (k, v)
-    return v
-
-
 def _from_np(v):
     """numpy scalar/array → plain python (Arrow round-trip artifacts)."""
-    import numpy as np
-
     if isinstance(v, np.generic):
         return v.item()
     if isinstance(v, np.ndarray):
@@ -1159,8 +1378,9 @@ class _ListAccumulator(AccumulatorParam):
 
 
 class Pipeline:
-    """Entry point. Transforms build DataFrames eagerly (the lazy DAG is
-    Catalyst's — reference CollectionMap parity per SURVEY §1.3)."""
+    """Entry point. Element-wise Python transforms extend a pending fused
+    stage; every other transform builds its DataFrame eagerly (the lazy
+    DAG is Catalyst's — reference CollectionMap parity per SURVEY §1.3)."""
 
     def __init__(self, spark: SparkSession, side_input_max_rows: int | None = None):
         self.spark = spark
@@ -1181,32 +1401,54 @@ class Pipeline:
         self._transform_idx += 1
         return label or f"{kind}{self._transform_idx}"
 
+    def _observe(self, df: DataFrame, aggs: list) -> DataFrame:
+        from pyspark.sql import Observation
+
+        obs = Observation()
+        self.metrics.track_observation(obs)
+        return df.observe(obs, *aggs)
+
     def _observe_elements(self, name: str, df: DataFrame) -> DataFrame:
         """Auto per-PCollection element counts + byte sizes (reference
         ELEMENT_COUNT / SAMPLED_BYTE_SIZE monitoring infos,
-        ray_fn_runner.py:462-534): an Observation aggregate piggybacked on
-        the transform's own execution — no extra action, no extra pass.
-        Byte size is the encoded value-column size (pickle/string length),
-        summed only when the column is cheaply measurable (binary/string —
-        the pickled default; typed values would need a to_json pass, which
-        is not worth the hot-path cost the reference avoids by sampling).
-        Surfaced as ``metrics.query()["element_counts"|"byte_counts"]``
-        once an action has executed the plan. Streaming DataFrames don't
-        take the Observation object form; they pass through unobserved."""
+        ray_fn_runner.py:462-534) for a PCollection that is its own
+        DataFrame (GBK and multi-output ParDo views): an Observation
+        aggregate piggybacked on the transform's own execution — no extra
+        action, no extra pass. Byte size is the encoded value-column size
+        (pickle/string length), summed only when the column is cheaply
+        measurable (binary/string — the pickled default; typed values
+        would need a to_json pass, which is not worth the hot-path cost
+        the reference avoids by sampling). Fused stages count inside
+        their Python pass instead (``_observe_stage``). Surfaced as
+        ``metrics.query()["element_counts"|"byte_counts"]`` once an action
+        has executed the plan. Streaming DataFrames don't take the
+        Observation object form; they pass through unobserved."""
         if df.isStreaming:
             return df
-        from pyspark.sql import Observation
-
-        obs = Observation(name)
-        aggs = [F.count(F.lit(1)).alias("element_count")]
-        value_type = dict(df.dtypes).get("value")
-        if value_type in ("binary", "string"):
+        aggs = [F.count(F.lit(1)).alias(f"{name}.element_count")]
+        if dict(df.dtypes).get("value") in ("binary", "string"):
             aggs.append(
-                F.coalesce(F.sum(F.length("value")), F.lit(0)).alias("byte_count")
+                F.coalesce(F.sum(F.length("value")), F.lit(0)).alias(f"{name}.byte_count")
             )
-        df = df.observe(obs, *aggs)
-        self.metrics.track_observation(name, obs)
-        return df
+        return self._observe(df, aggs)
+
+    def _observe_stage(self, df: DataFrame, steps: tuple) -> DataFrame:
+        """The same counts for the PCollections inside a fused stage, which
+        never exist as DataFrames: the stage's kernel counts each step's
+        outputs (and their encoded sizes, the pickle length for opaque
+        values) and emits them on marker rows; one Observation on the
+        stage output sums them per step."""
+
+        def total(i):
+            return F.coalesce(F.sum(F.col(_STATS)[i]), F.lit(0))
+
+        aggs = []
+        for i, st in enumerate(steps):
+            if st.name is not None:
+                aggs.append(total(2 * i).alias(f"{st.name}.element_count"))
+                if st.size is not None:
+                    aggs.append(total(2 * i + 1).alias(f"{st.name}.byte_count"))
+        return self._observe(df, aggs)
 
     def run_finalizers(self) -> int:
         """Invoke bundle-finalization callbacks accumulated from completed
@@ -1216,8 +1458,6 @@ class Pipeline:
         swallowed per Beam's best-effort contract (the reference's
         test_callbacks_with_exception asserts the pipeline still
         succeeds). Returns the number of callbacks invoked."""
-        from pyspark import cloudpickle
-
         blobs, self._finalizer_acc.value = self._finalizer_acc.value, []
         n = 0
         for blob in blobs:
@@ -1301,9 +1541,7 @@ class Pipeline:
             ]
         )
         df = self.spark.createDataFrame(data, schema=schema)
-        out = PCollection(self, df, True, value_type is None)
-        out.key_pickled = key_type is None
-        return out
+        return PCollection(self, df, True, value_type is None, key_pickled=key_type is None)
 
     def impulse(self) -> PCollection:
         """Single seed element (reference translator.py:95-102)."""

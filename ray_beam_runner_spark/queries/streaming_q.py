@@ -31,9 +31,10 @@ from ray_beam_runner_spark.queries import query, scratch_dir, t
     """,
 )
 def q_streaming_window(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tumbling event-time window count/sum over the events table replayed
-    as 5 ts-ordered micro-batches with a 10-minute watermark, drained with
-    availableNow. The reference's windowed-aggregation path on a live
+    """Tumbling event-time window count/sum over the events table dropped
+    as 3 ts-ordered file slices with a 10-minute watermark, drained with
+    availableNow: 3 data micro-batches, then 1 no-data batch that emits
+    the windows the final watermark closed. The reference's windowed-aggregation path on a live
     stream (WindowInto + GBK under the portability runner), with emitted
     output equal to the batch computation on watermark-closed windows."""
     from ray_beam_runner_spark.streaming import FileDropStream, run_to_memory, windowed_agg_stream

@@ -6,7 +6,11 @@ bench.py session profile (bench_session):
 2. one more run with the Spark event log on, listing its jobs in
    submission order: driver gap before the job, run time, stage count
    and the package call site of the DataFrame action that launched it,
-   then the totals for job wall and driver gap.
+   then the totals for job wall and driver gap, and the CPU the JVM's
+   reaped child processes used during that run (``cutime + cstime`` of
+   ``/proc/<jvm pid>/stat``; ``n/a`` without ``/proc``). Without
+   Hadoop's native library the JVM forks ``chmod``/``readlink`` for
+   local file permission and rename calls, and this is their cost.
 
 Call sites ride the event log itself: every DataFrame action (and
 writer / spark.sql call) is wrapped for the logged run so it sets the
@@ -140,8 +144,28 @@ def read_jobs(evdir: str) -> list[dict]:
     return [jobs[j] for j in sorted(jobs)]
 
 
-def report(name: str, jobs: list[dict], t_start: float, t_end: float) -> None:
-    """Print one query's jobs; t_start/t_end bound the logged run in ms."""
+def child_cpu_s(stat: str, hz: int) -> float:
+    """Reaped-children CPU seconds (cutime + cstime, fields 16-17) of a
+    ``/proc/<pid>/stat`` line. The command name (field 2) may hold spaces
+    and parentheses, so fields are counted from its closing paren."""
+    fields = stat[stat.rindex(")") + 2 :].split()  # fields[0] is field 3
+    return (int(fields[13]) + int(fields[14])) / hz
+
+
+def jvm_child_cpu_s(pid: int) -> float | None:
+    """child_cpu_s of a live process; None where /proc is missing."""
+    try:
+        with open(f"/proc/{pid}/stat") as f:
+            return child_cpu_s(f.read(), os.sysconf("SC_CLK_TCK"))
+    except OSError:
+        return None
+
+
+def report(
+    name: str, jobs: list[dict], t_start: float, t_end: float, child_cpu: float | None
+) -> None:
+    """Print one query's jobs; t_start/t_end bound the logged run in ms;
+    child_cpu is the JVM's reaped-children CPU over it (None: n/a)."""
     prev = t_start
     tot_job = tot_gap = 0.0
     print(f"--- jobs for {name} (logged run {(t_end - t_start) / 1000:.3f}s) ---")
@@ -161,6 +185,8 @@ def report(name: str, jobs: list[dict], t_start: float, t_end: float) -> None:
         f"  TOTAL jobs={len(jobs)} stages={sum(j['stages'] for j in jobs)} "
         f"job wall {tot_job:.3f}s, driver gaps {tot_gap:.3f}s"
     )
+    cpu = "n/a" if child_cpu is None else f"{child_cpu:.3f}s"
+    print(f"  JVM reaped-children CPU {cpu}")
 
 
 def profile(names: list[str], sf_dir: str, evdir: str) -> None:
@@ -175,6 +201,7 @@ def profile(names: list[str], sf_dir: str, evdir: str) -> None:
     from ray_beam_runner_spark.caches import release_tracked
 
     sc = spark.sparkContext
+    jvm_pid = sc._jvm.java.lang.ProcessHandle.current().pid()
     windows = {}
     for name in names:
         fn = QUERIES[name]
@@ -184,18 +211,20 @@ def profile(names: list[str], sf_dir: str, evdir: str) -> None:
         print(f"=== {name}: budgeted min {best:.4f}s ({n} samples, min gap {gap:.1%})")
         sys.stdout.flush()
         with call_sites(sc):
+            c0 = jvm_child_cpu_s(jvm_pid)
             t0 = int(time.time() * 1000)  # event-log times are whole ms
             run_query(fn, spark, sf_dir)
             t1 = time.time() * 1000
+            c1 = jvm_child_cpu_s(jvm_pid)
         release_tracked()
         spark.catalog.clearCache()
-        windows[name] = (t0, t1)
+        windows[name] = (t0, t1, None if c0 is None or c1 is None else c1 - c0)
 
     spark.stop()  # flushes the event log
     jobs = read_jobs(evdir)
     for name in names:
-        t0, t1 = windows[name]
-        report(name, [j for j in jobs if t0 <= j["t0"] <= t1], t0, t1)
+        t0, t1, child_cpu = windows[name]
+        report(name, [j for j in jobs if t0 <= j["t0"] <= t1], t0, t1, child_cpu)
 
 
 def main() -> int:

@@ -804,3 +804,237 @@ def test_bundle_finalization_on_write_text(p, tmp_path):
     pc = p.create(["a", "b"]).par_do(FinalizableDoFn(), output_type="string")
     pc.write_text(out_dir)
     assert marker.exists()
+
+
+# -- stage fusion: a chain of element-wise transforms is one Python pass --
+
+
+def _map_in_pandas_nodes(pc) -> int:
+    return pc.to_dataframe()._jdf.queryExecution().executedPlan().toString().count("MapInPandas")
+
+
+def test_fused_wordcount_is_one_python_pass(p):
+    # ParDo -> map -> (key, value) split: one mapInPandas, not three
+    class Split(DoFn):
+        def process(self, element, timestamp=None, window=None, **side):
+            yield from element.split()
+
+    words = p.create(["the cat", "the dog", "cat"], value_type="string").par_do(Split())
+    kv = words.map_to_kv(lambda w: (w, 1), key_type="string", value_type="bigint")
+    assert _map_in_pandas_nodes(kv) == 1
+    counts = kv.combine_per_key("sum")
+    assert _map_in_pandas_nodes(counts) == 1
+    counts.assert_that([("the", 2), ("cat", 2), ("dog", 1)])
+
+
+def test_multi_output_gbk_and_joined_side_split_the_chain(p):
+    class Route(DoFn):
+        def process(self, element, timestamp=None, window=None, **side):
+            yield TaggedOutput("odd", element) if element % 2 else element
+
+    base = p.create([1, 2, 3, 4], value_type="bigint").map(lambda x: x + 10)
+    # input chain, the persisted multi-output pass, the chain after it
+    outs = base.par_do(Route(), outputs=("odd",))
+    even = outs["main"].map(lambda x: x * 2)
+    assert _map_in_pandas_nodes(even) == 3
+    even.assert_that([24, 28])
+    # chain before the GBK, chain after it
+    grouped = base.map_to_kv(lambda x: (x % 2, x)).group_by_key().map_kv_values(sorted)
+    assert _map_in_pandas_nodes(grouped) == 2
+    grouped.assert_that([(0, [12, 14]), (1, [11, 13])])
+    # main chain before the join, side (k, v) split, joined stage + map
+    side = p.create([(11, "x"), (12, "y")])
+
+    class Lookup(DoFn):
+        def process(self, element, timestamp=None, window=None, mm=None):
+            yield (element, mm[element])
+
+    joined = base.map(lambda x: x).par_do(
+        Lookup(), side_inputs={"mm": AsMultiMapJoined(side)}
+    ).map(lambda kv: (kv[0], len(kv[1])))
+    assert _map_in_pandas_nodes(joined) == 3
+    joined.assert_that([(11, 1), (12, 1), (13, 0), (14, 0)])
+    p.release()
+
+
+def test_fused_dofn_lifecycle_order(p, tmp_path):
+    # Beam's bundle order: consumers set up and start first, producers
+    # finish first, and step 1's finish_bundle output is processed by
+    # step 2 before step 2 finishes. The steps log to one file (each
+    # DoFn is its own object in the worker).
+    path = str(tmp_path / "lifecycle.log")
+
+    def log(event):
+        with open(path, "a") as f:
+            f.write(event + "\n")
+
+    class First(DoFn):
+        def setup(self):
+            log("setup1")
+
+        def start_bundle(self):
+            log("start1")
+
+        def process(self, element, timestamp=None, window=None, **side):
+            log(f"process1:{element}")
+            yield element
+
+        def finish_bundle(self):
+            log("finish1")
+            return ["flushed"]
+
+    class Second(DoFn):
+        def setup(self):
+            log("setup2")
+
+        def start_bundle(self):
+            log("start2")
+
+        def process(self, element, timestamp=None, window=None, **side):
+            log(f"process2:{element}")
+            yield element
+
+        def finish_bundle(self):
+            log("finish2")
+            with open(path) as f:
+                return [tuple(f.read().split())]
+
+    out = p.create(["a"]).reshuffle(1).par_do(First()).par_do(Second())
+    assert _map_in_pandas_nodes(out) == 1
+    out.assert_that([
+        "a",
+        "flushed",
+        (
+            "setup2", "setup1", "start2", "start1",
+            "process1:a", "process2:a",
+            "finish1", "process2:flushed", "finish2",
+        ),
+    ])
+
+
+def test_dofn_reused_in_one_chain_is_two_instances(p):
+    # as in Beam (and as with one pass per transform), applying the same
+    # DoFn object twice gives each application its own state
+    class Seen(DoFn):
+        def start_bundle(self):
+            self.seen = []
+
+        def process(self, element, timestamp=None, window=None, **side):
+            self.seen.append(element)
+            yield element
+
+        def finish_bundle(self):
+            return [("seen", tuple(self.seen))]
+
+    seen = Seen()
+    out = p.create(["a"]).reshuffle(1).par_do(seen).par_do(seen)
+    out.assert_that([
+        "a",
+        ("seen", ("a",)),
+        ("seen", ("a", ("seen", ("a",)))),
+    ])
+
+
+def test_user_code_is_captured_when_the_transform_is_applied(p):
+    # as Beam's ParDo pickles its fn when built: driver state changed
+    # after a transform is applied must not reach it, even though a fused
+    # chain only builds its DataFrame later
+    base = p.create([1], value_type="bigint")
+    branches = [base.map(lambda x: x + i) for i in range(3)]
+    branches[0].flatten_with(*branches[1:]).assert_that([1, 2, 3])
+
+    class AddN(DoFn):
+        def __init__(self, n):
+            self.n = n
+
+        def process(self, element, timestamp=None, window=None, **side):
+            yield element + self.n
+
+    add = AddN(10)
+    first = base.par_do(add)
+    add.n = 100
+    second = first.par_do(add)
+    add.n = 1000
+    first.assert_that([11])
+    second.assert_that([111])
+
+
+def test_unencodable_output_is_a_dead_letter(p):
+    # under exception_handling an output that fails to encode dead-letters
+    # its element, and the element's other outputs are dropped with it
+    class EmitsLambda(DoFn):
+        def process(self, element, timestamp=None, window=None, **side):
+            yield element
+            if element == 2:
+                yield lambda: element  # plain pickle cannot encode it
+
+    outs = p.create([1, 2, 3]).par_do(EmitsLambda(), exception_handling=True)
+    outs["main"].assert_that([1, 3])
+    assert [e for e, _ in outs["error"].collect()] == [2]
+    p.release()
+
+
+def test_fused_chain_element_and_byte_counts(p):
+    import pickle
+
+    words = p.create(["a bb", "ccc"], value_type="string").flat_map(str.split)  # ParDo1
+    upper = words.filter(lambda w: w != "bb").map(str.upper, output_type="string")  # ParDo2
+    pairs = upper.map(lambda w: (w, 1))  # ParDo3
+    names = {"ParDo1.out", "ParDo2.out", "ParDo3.out"}
+    assert not names & set(p.metrics.query()["element_counts"])  # before the action
+    pairs.assert_that([("A", 1), ("CCC", 1)])
+    q = p.metrics.query()
+
+    def size(v):
+        return len(pickle.dumps(v, pickle.HIGHEST_PROTOCOL))
+
+    assert {n: q["element_counts"][n] for n in names} == {
+        "ParDo1.out": 3, "ParDo2.out": 2, "ParDo3.out": 2,
+    }
+    assert {n: q["byte_counts"][n] for n in names} == {
+        "ParDo1.out": size("a") + size("bb") + size("ccc"),
+        "ParDo2.out": len("A") + len("CCC"),  # typed string: its length
+        "ParDo3.out": size(("A", 1)) + size(("CCC", 1)),
+    }
+
+
+def test_dead_letters_after_a_fused_chain(p):
+    class Flaky(DoFn):
+        def process(self, element, timestamp=None, window=None, **side):
+            yield element * 10
+            if element == 4:
+                raise ValueError("boom on 4")
+
+    outs = p.create([1, 2, 3]).map(lambda x: x * 2).par_do(Flaky(), exception_handling=True)
+    outs["main"].assert_that([20, 60])
+    assert outs["error"].collect() == [(4, "ValueError('boom on 4')")]
+    outs["error"].map(lambda e: e[0]).assert_that([4])
+    p.release()
+
+
+def test_unexecuted_chains_do_not_block_metrics(p):
+    pending = p.create([1, 2, 3]).map(lambda x: x + 1).map(lambda x: x * 2)
+    pending.map(str)  # never built
+    pending.to_dataframe()  # built, never executed
+    q = p.metrics.query()
+    assert q["element_counts"] == {} and q["byte_counts"] == {}
+
+
+def test_streaming_dataframe_through_a_fused_chain(p, spark, tmp_path):
+    src = str(tmp_path / "src")
+    spark.createDataFrame([("a b",), ("c",)], "text string").write.parquet(src)
+    stream = spark.readStream.schema("text string").parquet(src)
+    out = (
+        p.from_dataframe(stream, "text")
+        .flat_map(str.split)
+        .map(str.upper, output_type="string")
+        .to_dataframe()
+    )
+    assert out.isStreaming
+    q = (
+        out.select("value").writeStream.format("memory").queryName("fused_stream")
+        .trigger(availableNow=True).start()
+    )
+    q.awaitTermination()
+    assert sorted(r.value for r in spark.table("fused_stream").collect()) == ["A", "B", "C"]
+    spark.catalog.dropTempView("fused_stream")
