@@ -1,46 +1,60 @@
-"""Distributed k-means and product quantization as pure DataFrame algebra.
+"""Distributed k-means and product quantization with oracle-exact arithmetic.
 
 The IVF/SemDeDup family trains its coarse quantizer with Spark ML KMeans
 (`functions.similarity.ivf_fit` — sampled, convergence-based, fast), which
 is NOT SQL-expressible, so those queries verify rows-only. This module is
 the differential-testable twin: fixed-iteration Lloyd iteration (Lloyd,
 "Least squares quantization in PCM", IEEE Trans. IT 1982) with
-deterministic initialization, where every round is plain DataFrame
-algebra and therefore one SQL CTE — the same design that made PageRank
-hash-checkable against DuckDB (`functions.graph.pagerank`). Product
-quantization (Jegou, Douze, Schmid, "Product quantization for nearest
-neighbor search", IEEE TPAMI 2011) composes the same Lloyd core per
-subspace: codebooks, code assignment, and asymmetric-distance (ADC)
-search are all expressions, so the WHOLE compressed-ANN pipeline is
-hash-checkable.
+deterministic initialization, whose every round replays as SQL CTEs, as
+PageRank does (`functions.graph.pagerank`). Product quantization (Jegou,
+Douze, Schmid, "Product quantization for nearest neighbor search", IEEE
+TPAMI 2011) runs the same Lloyd kernel per subspace: codebooks, codes and
+asymmetric-distance (ADC) search, so the WHOLE compressed-ANN pipeline
+is hash-checkable.
 
-Scale shape (100 TB): centroids/codebooks are k x dim (resp. m x k x
-dim/m) tables, BROADCAST into every assignment join — the corpus is
-touched with one broadcast join + map-side-combinable aggregations per
-round, no vector shuffle beyond cell-keyed partials. The corpus frame is
-persisted once (tracked) and reused across rounds/subspaces; centroid
-lineage is truncated per round with localCheckpoint so plan depth stays
-constant in n_iter. PQ codes compress dim floats to m small ints (here
-64 x f32 -> m bytes), which is what makes billion-vector ANN fit in
-memory; ADC scores candidates with an m-term codebook lookup instead of
-a dim-term dot product. Empty clusters follow Lloyd convention: a cell
-that loses all members vanishes (k shrinks) — deterministic on both
-engines.
+Every Lloyd round and every code assignment is ONE vectorized Arrow
+kernel pass (Velox-style: the hot loop over columnar batches, not
+interpreted per-row expressions). A round's ``mapInArrow`` over the
+persisted corpus assigns every vector in every subspace and emits
+per-partition (subspace, cell, dimension) partial sums and counts; one
+small Spark reduction ``round(sum(s) / sum(n), 9)`` — ``avg``'s own
+definition — gives the rounded centroids the SQL ``avg`` gave. The
+kernel's arithmetic is the SQL fold's: squared L2 summed over dimensions
+in index order from 0.0, ties to the lowest cell, NaN above +inf (the
+order of Spark's ``min(struct(d, cell))``). The k x dim centroids ride
+the next kernel's closure, as MLlib broadcasts its centers; the model
+DataFrames are built once per fit.
 
-Formulations measured and rejected (sf0.01, 500 x 64): driver-literal
-centroids with zip_with against a literal array (interpreted HOFs
-re-evaluate argument expressions PER ELEMENT — k x dim literals become
-k x dim^2 evaluations/row; 2x slower) and an explicit k x dim flat
-term chain (4000-node expression tree, whole-stage codegen compile
-dominates; 3.5x slower). Column-to-column zip_with + broadcast join is
-both the fastest here and the only shape whose cost model survives
-k, dim growth.
+Scale shape (100 TB): the corpus is persisted once (tracked) and read
+once per round; only per-partition k x dim partials shuffle, and the
+driver holds only model-sized centroids. PQ codes compress dim floats to
+m small ints (64 x f32 -> m bytes here), which is what makes
+billion-vector ANN fit in memory; ADC scores candidates with an m-term
+codebook lookup instead of a dim-term dot product. Empty clusters follow
+Lloyd convention: a cell that loses all members vanishes (k shrinks).
+
+Formulations measured:
+- SQL rounds (replaced): ``crossJoin(broadcast(cent))`` with an
+  interpreted ``aggregate(zip_with(...))`` per (vector, centroid) pair,
+  ``groupBy(vid)`` min, a join back, ``groupBy(cell)`` over dim ``avg``
+  columns and a ``localCheckpoint``: 3 exchanges and a checkpoint per
+  round. Driver-literal centroids in ``zip_with`` were 2x slower still
+  (HOFs re-evaluate literal arguments per element) and a k x dim flat
+  term chain 3.5x slower (codegen compile dominates).
+- The kernel: ``q_kmeans`` 7 -> 5 jobs on the bench session and 15 -> 9
+  on ``get_spark()``, where its warm time is about a third lower
+  (CHANGES.md). It is not the rejected driver round trip, which
+  re-injected each round's centroids through ``createDataFrame`` and
+  still ran the SQL assignment join over them: no DataFrame is built
+  per round.
 """
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 __all__ = [
     "kmeans_lloyd",
@@ -57,13 +71,15 @@ __all__ = [
 
 def _prepare(df: DataFrame, id_col: str, vec_col: str):
     """Persisted (vid, e::array<double>) frame + validated dimension.
-    Loud error on NULL/ragged vectors: silent null-padding in zip_with
-    would corrupt every distance (size(NULL) = -1 lands here too)."""
+    Loud error on NULL/ragged vectors or NULL components: a missing
+    value has no squared distance. No rebalance of a partition-poor
+    input: the vectorized kernel costs a Python task per partition, and
+    on 500-2,000 vector inputs splitting one scan partition four ways
+    made every ANN query slower (CHANGES.md)."""
     from ray_beam_runner_spark.caches import track
-    from ray_beam_runner_spark.session import ensure_min_parallelism
 
     v = track(
-        ensure_min_parallelism(df).select(
+        df.select(
             F.col(id_col).alias("vid"),
             F.col(vec_col).cast("array<double>").alias("e"),
         )
@@ -72,80 +88,184 @@ def _prepare(df: DataFrame, id_col: str, vec_col: str):
         F.count(F.lit(1)).alias("n"),
         F.min(F.size("e")).alias("mn"),
         F.max(F.size("e")).alias("mx"),
+        # size(NULL) is NULL, not -1, under ANSI: count NULLs directly
+        F.max((F.col("e").isNull() | F.exists("e", lambda x: x.isNull())).cast("int")).alias("nulls"),
     ).first()
     if stats.n == 0:
         return v, 0
-    if stats.mn is None or stats.mn < 1 or stats.mn != stats.mx:
+    if stats.mn is None or stats.mn < 1 or stats.mn != stats.mx or stats.nulls:
         v.unpersist()
         raise ValueError(
             "k-means requires non-null, fixed-dimension vectors; "
             f"observed size range [{stats.mn}, {stats.mx}]"
+            + (", NULL vectors or components" if stats.nulls else "")
         )
     return v, stats.mx
 
 
-def _assign(v: DataFrame, cent: DataFrame) -> DataFrame:
-    """(vid, cell): argmin squared L2, ties to the lowest cell.
-    Column-to-column zip_with — HOF argument evaluation is plain
-    attribute access (no literal re-evaluation trap)."""
-    d = v.crossJoin(F.broadcast(cent)).select(
-        "vid",
-        "cell",
-        F.aggregate(
-            F.zip_with("e", "c", lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        ).alias("d"),
-    )
-    return (
-        d.groupBy("vid")
-        .agg(F.min(F.struct("d", "cell")).alias("m"))
-        .select("vid", F.col("m.cell").alias("cell"))
-    )
+# A quantizer is a list of (cells, centroids) per subspace: cell ids
+# ascending (int64) and their (k, d_sub) float64 centroid rows.
 
 
-def _lloyd_centroids(v: DataFrame, dim: int, k: int, n_iter: int) -> DataFrame:
-    """(cell, c) after n_iter deterministic (assign, update) rounds.
-    Init = vectors of the k smallest vids, cell = rank - 1."""
-    from pyspark.sql import Window as W
+def _nearest(x: np.ndarray, c: np.ndarray) -> np.ndarray:
+    """Row index into ``c`` of each row of ``x``'s nearest centroid:
+    squared L2 folded over dimensions in index order from 0.0 (the SQL
+    fold's arithmetic), ties to the lowest row, NaN above +inf."""
+    d = np.zeros((len(x), len(c)))
+    for i in range(c.shape[1]):
+        diff = x[:, i, None] - c[None, :, i]
+        d += diff * diff
+    nan = np.isnan(d)
+    d[nan] = np.inf
+    hit = (d == d.min(axis=1, keepdims=True)) & ~nan
+    hit[~hit.any(axis=1)] = True  # every distance NaN: all tie
+    return hit.argmax(axis=1)
 
-    cent = (
-        v.orderBy("vid")
-        .limit(k)
-        .select(
-            (F.row_number().over(W.orderBy("vid")) - 1).cast("long").alias("cell"),
-            F.col("e").alias("c"),
+
+def _matrix(col, dim: int) -> np.ndarray:
+    """(rows, dim) float64 matrix of an Arrow list<double> column."""
+    return col.flatten().to_numpy(zero_copy_only=False).reshape(-1, dim)
+
+
+def _residual(x: np.ndarray, coarse) -> tuple[np.ndarray, np.ndarray]:
+    """(coarse cell, vector minus its cell centroid) per row."""
+    cells, cent = coarse[0]
+    a = _nearest(x, cent)
+    return cells[a], x - cent[a]
+
+
+def _split(x: np.ndarray, books: list):
+    """(subspace j, x's column slice, cells, centroids) per subspace."""
+    d = x.shape[1] // len(books)
+    for j, (cells, cent) in enumerate(books):
+        yield j, x[:, j * d:(j + 1) * d], cells, cent
+
+
+def _lloyd(v: DataFrame, dim: int, books: list, n_iter: int, coarse=None) -> list:
+    """``books`` after ``n_iter`` Lloyd rounds over ``v`` (its residuals
+    against ``coarse`` when given), every subspace in the same pass."""
+    import pyarrow as pa
+
+    def partials(batches):
+        sums = [np.zeros_like(cent) for _, cent in books]
+        counts = [np.zeros(len(cent), np.int64) for _, cent in books]
+        for b in batches:
+            x = _matrix(b.column("e"), dim)
+            if coarse is not None:
+                x = _residual(x, coarse)[1]
+            for j, xs, _, cent in _split(x, books):
+                a = _nearest(xs, cent)
+                counts[j] += np.bincount(a, minlength=len(cent))
+                for i in range(xs.shape[1]):
+                    sums[j][:, i] += np.bincount(a, weights=xs[:, i], minlength=len(cent))
+        out = {"j": [], "cell": [], "i": [], "s": [], "n": []}
+        for j, (cells, cent) in enumerate(books):
+            live = counts[j] > 0
+            k, d = int(live.sum()), cent.shape[1]
+            out["j"].append(np.full(k * d, j, np.int32))
+            out["cell"].append(np.repeat(cells[live], d))
+            out["i"].append(np.tile(np.arange(d, dtype=np.int32), k))
+            out["s"].append(sums[j][live].ravel())
+            out["n"].append(np.repeat(counts[j][live], d))
+        yield pa.RecordBatch.from_arrays(
+            [pa.array(np.concatenate(c)) for c in out.values()], names=list(out)
         )
-    )
+
     for _ in range(n_iter):
-        cent = (
-            _assign(v, cent)
-            .join(v, "vid")
-            .groupBy("cell")
-            # dim avg columns = ONE map-side-combinable shuffle of
-            # k x dim partials; a posexplode mean costs two keyed
-            # aggregations and a collect_list re-assembly. Means are
-            # ROUNDED to 9 dp: double partial-sum order is partition-
-            # dependent (and differs from DuckDB's), so raw avg is only
-            # ulp-reproducible — rounding pins the centroids bit-exactly
-            # across engines and runs, and the next round's distance
-            # folds then agree exactly
-            .agg(
-                F.array(
-                    *[F.round(F.avg(F.element_at("e", i + 1)), 9) for i in range(dim)]
-                ).alias("c")
-            )
-            # k x dim rows: the checkpoint keeps the plan one round deep
-            # however large n_iter grows. LAZY since round 17: the next
-            # round's (or final assignment's) broadcast build is an
-            # unconditional action that materializes the blocks in ITS
-            # job — interleaved min-of-5 A/B read lazy equal-or-better
-            # on all four ANN queries (q_kmeans 1.16 -> 1.13,
-            # q_ivfpq_topk 2.02 -> 1.88), the round-16 eager/driver
-            # variants both measured worse
-            .localCheckpoint(eager=False)
+        means = (
+            v.mapInArrow(partials, "j int, cell long, i int, s double, n long")
+            .groupBy("j", "cell", "i")
+            .agg(F.round(F.sum("s") / F.sum("n"), 9).alias("c"))
+            .toArrow()
         )
-    return cent
+        j, cell, i, c = (means[n].to_numpy() for n in ("j", "cell", "i", "c"))
+        order = np.lexsort((i, cell, j))
+        j, cell, c = j[order], cell[order], c[order]
+        d = dim // len(books)
+        books = [
+            (cell[j == s][::d], c[j == s].reshape(-1, d)) for s in range(len(books))
+        ]
+    return books
+
+
+def _smallest(v: DataFrame, dim: int, k: int) -> np.ndarray:
+    """(k, dim) vectors of the k smallest vids, in vid order."""
+    rows = v.orderBy("vid").limit(k).collect()
+    return np.array([r.e for r in rows], dtype=np.float64).reshape(-1, dim)
+
+
+def _seed(x: np.ndarray, m: int) -> list:
+    """Initial quantizer over rows ``x``: cell = rank - 1, m subspaces."""
+    cells = np.arange(len(x), dtype=np.int64)
+    d = x.shape[1] // m
+    return [(cells, x[:, j * d:(j + 1) * d]) for j in range(m)]
+
+
+def _encode(v: DataFrame, id_col: str, dim: int, books: list, coarse=None, codes=True):
+    """One kernel pass: (id_col[, cell], codes) with cell = the coarse
+    cell (when ``coarse`` is given) and codes[j] = nearest cell of
+    subspace j; ``codes=False`` emits the one subspace's cell instead."""
+    import pyarrow as pa
+
+    schema = T.StructType([T.StructField(id_col, v.schema["vid"].dataType)])
+    if coarse is not None:
+        schema.add("cell", T.LongType())
+    schema.add(*(("codes", T.ArrayType(T.LongType())) if codes else ("cell", T.LongType())))
+
+    def kernel(batches):
+        for b in batches:
+            x = _matrix(b.column("e"), dim)
+            cols = [b.column("vid")]
+            if coarse is not None:
+                cell, x = _residual(x, coarse)
+                cols.append(pa.array(cell))
+            got = np.stack([cells[_nearest(xs, cent)] for _, xs, cells, cent in _split(x, books)], 1)
+            if codes:
+                offsets = np.arange(0, got.size + 1, len(books), dtype=np.int32)
+                cols.append(pa.ListArray.from_arrays(offsets, got.ravel()))
+            else:
+                cols.append(pa.array(got[:, 0]))
+            yield pa.RecordBatch.from_arrays(cols, names=schema.names)
+
+    return v.mapInArrow(kernel, schema)
+
+
+def _frame(spark, books: list, keyed: bool = True) -> DataFrame:
+    """The model DataFrame of a quantizer: (j, cell, c), or (cell, c).
+    Built from Arrow, so it is a LocalRelation: reading it, broadcasts
+    included, runs no Spark job."""
+    import pyarrow as pa
+
+    t = pa.table({
+        "j": pa.array([j for j, (cells, _) in enumerate(books) for _ in cells], pa.int32()),
+        "cell": pa.array(np.concatenate([cells for cells, _ in books])),
+        "c": pa.array([row for _, cent in books for row in cent.tolist()], pa.list_(pa.float64())),
+    })
+    if keyed:
+        return spark.createDataFrame(t, "j int, cell long, c array<double>")
+    return spark.createDataFrame(t.drop(["j"]), "cell long, c array<double>")
+
+
+def _collect_model(books: DataFrame, coarse: DataFrame | None = None):
+    """(books, coarse) quantizers of model DataFrames in ONE collect:
+    books per subspace j ascending, coarse as one subspace (None when
+    not given)."""
+    frame = books.select("j", "cell", "c")
+    if coarse is not None:
+        frame = frame.unionByName(coarse.select(F.lit(-1).alias("j"), "cell", "c"))
+    by_j: dict = {}
+    for r in frame.collect():
+        by_j.setdefault(r.j, []).append((r.cell, list(r.c)))
+
+    def quantizer(rows):
+        rows.sort(key=lambda r: r[0])
+        return (
+            np.array([cell for cell, _ in rows], np.int64),
+            np.array([c for _, c in rows], np.float64),
+        )
+
+    model = [quantizer(by_j[j]) for j in sorted(by_j) if j >= 0]
+    return model, ([quantizer(by_j[-1])] if -1 in by_j else None)
 
 
 def kmeans_lloyd(
@@ -163,7 +283,7 @@ def kmeans_lloyd(
     Deterministic by construction — what makes it ORACLE-EXPRESSIBLE:
     - init: the vectors of the ``k`` smallest ids, cell = rank - 1;
     - assignment: argmin squared L2 distance, ties to the lowest cell
-      (min over (distance, cell) structs);
+      (Spark's min over (distance, cell) structs: NaN above +inf);
     - distances fold dimension-index order on both engines, so the
       double arithmetic agrees bit-for-bit;
     - centroid means round to 9 dp before the next round — the raw avg
@@ -178,8 +298,8 @@ def kmeans_lloyd(
     if dim == 0:
         v.unpersist()
         return v.select(F.col("vid").alias(id_col), F.lit(0).cast("long").alias("cell"))
-    cent = _lloyd_centroids(v, dim, k, n_iter)
-    return _assign(v, cent).select(F.col("vid").alias(id_col), "cell")
+    cent = _lloyd(v, dim, _seed(_smallest(v, dim, k), 1), n_iter)
+    return _encode(v, id_col, dim, cent, codes=False)
 
 
 def _sub(j: int, d_sub: int):
@@ -203,57 +323,6 @@ def _explode_subspaces(df: DataFrame, m: int, d_sub: int, keep=("vid",)) -> Data
             )
         ).alias("s"),
     ).select(*keep, F.col("s.j").alias("j"), F.col("s.e").alias("e"))
-
-
-def _assign_keyed(v: DataFrame, cent: DataFrame) -> DataFrame:
-    """(j, vid, cell): per-subspace argmin squared L2, ties to the
-    lowest cell — all m subspaces in one broadcast join on j."""
-    d = v.join(F.broadcast(cent), "j").select(
-        "j",
-        "vid",
-        "cell",
-        F.aggregate(
-            F.zip_with("e", "c", lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        ).alias("d"),
-    )
-    return (
-        d.groupBy("j", "vid")
-        .agg(F.min(F.struct("d", "cell")).alias("m"))
-        .select("j", "vid", F.col("m.cell").alias("cell"))
-    )
-
-
-def _lloyd_centroids_keyed(v: DataFrame, d_sub: int, k: int, n_iter: int) -> DataFrame:
-    """(j, cell, c): m independent Lloyd iterations advanced in
-    lockstep — each round is ONE corpus pass (assignment join grouped
-    by (j, vid), mean grouped by (j, cell)) instead of m. Arithmetic
-    identical per subspace to _lloyd_centroids (same init, ties,
-    9-dp rounded means), so the oracle CTEs are unaffected."""
-    from pyspark.sql import Window as W
-
-    w = W.partitionBy("j").orderBy("vid")
-    cent = (
-        v.withColumn("_r", F.row_number().over(w))
-        .filter(F.col("_r") <= k)
-        .select("j", (F.col("_r") - 1).cast("long").alias("cell"), F.col("e").alias("c"))
-    )
-    for _ in range(n_iter):
-        cent = (
-            _assign_keyed(v, cent)
-            .join(v, ["j", "vid"])
-            .groupBy("j", "cell")
-            .agg(
-                F.array(
-                    *[F.round(F.avg(F.element_at("e", i + 1)), 9) for i in range(d_sub)]
-                ).alias("c")
-            )
-            # lazy for the same reason as _lloyd_centroids: the next
-            # broadcast build materializes the blocks in its own job
-            .localCheckpoint(eager=False)
-        )
-    return cent
 
 
 def _check_query_vectors(q: DataFrame, dim: int, what: str) -> None:
@@ -282,10 +351,10 @@ def pq_fit(
     """Train product-quantization codebooks: the vector splits into
     ``m`` contiguous subspaces and each gets its own deterministic
     Lloyd codebook of ``k`` centroids (Jegou et al. 2011 §II), all m
-    trained in lockstep by the keyed Lloyd core (one corpus pass per
-    round). Returns (j, cell, c) — an m x k x (dim/m) table,
-    MODEL-sized, broadcastable. dim must divide evenly by m (loud
-    error otherwise)."""
+    trained in lockstep (one corpus pass per round). Returns
+    (j, cell, c) — an m x k x (dim/m) table, MODEL-sized,
+    broadcastable. dim must divide evenly by m (loud error
+    otherwise)."""
     v, dim = _prepare(df, id_col, vec_col)
     if dim == 0:
         v.unpersist()
@@ -293,9 +362,8 @@ def pq_fit(
     if dim % m:
         v.unpersist()
         raise ValueError(f"pq_fit: dim {dim} not divisible by m={m}")
-    d_sub = dim // m
-    vs = _explode_subspaces(v, m, d_sub)
-    return _lloyd_centroids_keyed(vs, d_sub, k, n_iter).select("j", "cell", "c")
+    books = _lloyd(v, dim, _seed(_smallest(v, dim, k), m), n_iter)
+    return _frame(df.sparkSession, books)
 
 
 def pq_encode(
@@ -305,31 +373,20 @@ def pq_encode(
     vec_col: str,
 ) -> DataFrame:
     """Encode vectors against fitted codebooks: (id_col, codes) where
-    codes[j] = argmin cell of subspace j (ties to lowest cell). One
-    broadcast join over the subspace-exploded corpus; codes assemble
-    in j order via an array_sort fold, so the array is deterministic."""
+    codes[j] = argmin cell of subspace j (ties to lowest cell), in j
+    order. The codebooks are collected once (model-sized); the corpus
+    is encoded in one kernel pass."""
     v, dim = _prepare(df, id_col, vec_col)
-    mk = [(int(r.j), int(r.mx) if r.mx is not None else 0)
-          for r in codebooks.groupBy("j").agg(F.max(F.size("c")).alias("mx")).collect()]
-    m = len(mk)
-    if m == 0 or dim == 0 or dim % m or any(sz != dim // m for _, sz in mk):
+    books, _ = _collect_model(codebooks)
+    m = len(books)
+    sizes = [cent.shape[1] for _, cent in books]
+    if m == 0 or dim == 0 or dim % m or any(sz != dim // m for sz in sizes):
         v.unpersist()
         raise ValueError(
             f"pq_encode: dim {dim} incompatible with {m} codebooks of "
-            f"subspace sizes {sorted(mk)}"
+            f"subspace sizes {sizes}"
         )
-    d_sub = dim // m
-    parts = _assign_keyed(
-        _explode_subspaces(v, m, d_sub), codebooks.select("j", "cell", "c")
-    )
-    return (
-        parts.groupBy("vid")
-        .agg(F.array_sort(F.collect_list(F.struct("j", "cell"))).alias("jc"))
-        .select(
-            F.col("vid").alias(id_col),
-            F.transform("jc", lambda s: s["cell"]).alias("codes"),
-        )
-    )
+    return _encode(v, id_col, dim, books)
 
 
 def pq_adc_topk(
@@ -432,14 +489,13 @@ def ivfpq_index(
     each vector to m codes. Returns (coarse, books, index):
     coarse = (cell, c), books = (j, cell, c) over residual subspaces,
     index = (id_col, cell, codes). All three stages reuse the
-    deterministic Lloyd core (the PQ stage keyed — one residual pass
-    per round for all m subspaces), so the whole index is reproducible
-    and oracle-expressible.
+    deterministic Lloyd kernel (the PQ rounds take each residual inside
+    the kernel — one corpus pass per round for all m subspaces), so the
+    whole index is reproducible and oracle-expressible.
 
-    Scale shape: coarse and books are model-sized and broadcast; the
-    corpus is touched by one assignment join per stage and one
-    residual projection — no vector ever shuffles except as cell-keyed
-    aggregate partials."""
+    Scale shape: coarse and books are model-sized and ride the kernel's
+    closure; the corpus is read once per round and once for the index,
+    and no vector ever shuffles — only cell-keyed partial sums do."""
     v, dim = _prepare(df, id_col, vec_col)
     if dim == 0:
         v.unpersist()
@@ -447,56 +503,34 @@ def ivfpq_index(
     if dim % m:
         v.unpersist()
         raise ValueError(f"ivfpq_index: dim {dim} not divisible by m={m}")
-    d_sub = dim // m
-    coarse = _lloyd_centroids(v, dim, n_cells, n_iter)
-    res = _residuals(v, coarse)
-    rs = _explode_subspaces(res.select("vid", "e"), m, d_sub)
-    books = _lloyd_centroids_keyed(rs, d_sub, k, n_iter)
-    index = _encode_residuals(res, rs, books, id_col)
-    return coarse, books.select("j", "cell", "c"), index
+    x0 = _smallest(v, dim, max(n_cells, k))
+    coarse = _lloyd(v, dim, _seed(x0[:n_cells], 1), n_iter)
+    seed = _seed(_residual(x0[:k], coarse)[1], m)
+    books = _lloyd(v, dim, seed, n_iter, coarse)
+    spark = df.sparkSession
+    index = _encode(v, id_col, dim, books, coarse)
+    return _frame(spark, coarse, keyed=False), _frame(spark, books), index
 
 
-def _residuals(v: DataFrame, coarse: DataFrame) -> DataFrame:
-    """(vid, cell, e): each vector's coarse cell + residual against its
-    centroid — one broadcast assignment join, tracked-persisted because
-    both the codes and the (vid, cell) re-join read it."""
-    from ray_beam_runner_spark.caches import track
-
-    asg = _assign(v, coarse)
-    return track(
-        asg.join(v, "vid")
-        .join(
-            F.broadcast(
-                coarse.withColumnRenamed("c", "cc").withColumnRenamed("cell", "vcell")
-            ),
-            F.col("cell") == F.col("vcell"),
-        )
-        .select(
-            "vid",
-            "cell",
-            F.zip_with("e", "cc", lambda x, y: x - y).alias("e"),
-        )
-    )
-
-
-def _encode_residuals(
-    res: DataFrame, rs: DataFrame, books: DataFrame, id_col: str
-) -> DataFrame:
-    """(id_col, cell, codes) from residuals + exploded subspaces against
-    fitted codebooks — the shared index/encode tail of ivfpq_index and
-    ivfpq_encode (identical arithmetic is what makes an incrementally
-    maintained index EQUAL a from-scratch rebuild)."""
-    codes_parts = _assign_keyed(rs, books).withColumnRenamed("cell", "code")
-    return (
-        codes_parts.groupBy("vid")
-        .agg(F.array_sort(F.collect_list(F.struct("j", "code"))).alias("jc"))
-        .join(res.select("vid", "cell"), "vid")
-        .select(
-            F.col("vid").alias(id_col),
-            "cell",
-            F.transform("jc", lambda s: s["code"]).alias("codes"),
-        )
-    )
+def _encode_ivfpq(df: DataFrame, model, id_col: str, vec_col: str, m: int | None):
+    """ivfpq_encode against an already collected (books, coarse) model."""
+    books, coarse = model
+    if not books:
+        raise ValueError("ivfpq_encode: empty codebooks")
+    m = m or len(books)
+    v, dim = _prepare(df, id_col, vec_col)
+    if dim == 0:
+        v.unpersist()
+        raise ValueError("ivfpq_encode on an empty corpus")
+    if dim % m:
+        v.unpersist()
+        raise ValueError(f"ivfpq_encode: dim {dim} not divisible by m={m}")
+    if coarse is None or coarse[0][1].shape[1] != dim or m != len(books) or any(
+        cent.shape[1] != dim // m for _, cent in books
+    ):
+        v.unpersist()
+        raise ValueError(f"ivfpq_encode: quantizer incompatible with dim {dim}, m={m}")
+    return _encode(v, id_col, dim, books, coarse)
 
 
 def ivfpq_encode(
@@ -514,24 +548,10 @@ def ivfpq_encode(
     arithmetic. This is the ingestion half of incremental ANN index
     maintenance (a 100 TB embeddings pipeline fits the quantizer once
     on a sample, then encodes every incoming batch against it — FAISS
-    add-after-train). Returns (id_col, cell, codes). ``m`` (subspace
-    count) is derived from ``books`` when omitted; repeated callers
-    (the streaming maintainer) pass it to skip that per-call job."""
-    v, dim = _prepare(df, id_col, vec_col)
-    if m is None:
-        mrow = books.agg(F.max("j")).first()[0]
-        if mrow is None:
-            raise ValueError("ivfpq_encode: empty codebooks")
-        m = int(mrow) + 1
-    if dim == 0:
-        v.unpersist()
-        raise ValueError("ivfpq_encode on an empty corpus")
-    if dim % m:
-        v.unpersist()
-        raise ValueError(f"ivfpq_encode: dim {dim} not divisible by m={m}")
-    res = _residuals(v, coarse)
-    rs = _explode_subspaces(res.select("vid", "e"), m, dim // m)
-    return _encode_residuals(res, rs, books.select("j", "cell", "c"), id_col)
+    add-after-train). Returns (id_col, cell, codes). The quantizer is
+    collected in one job; ``m`` (subspace count) defaults to the
+    codebooks' and must match it when given."""
+    return _encode_ivfpq(df, _collect_model(books, coarse), id_col, vec_col, m)
 
 
 def stream_maintain_ivfpq(
@@ -556,7 +576,7 @@ def stream_maintain_ivfpq(
     feed's checkpointed version offsets.
 
     Scale shape: per trigger the corpus is never touched — only the
-    batch's vectors are encoded (model-sized broadcast joins) and only
+    batch's vectors are encoded (one kernel pass) and only
     the index files containing affected ids are rewritten (file-pruned
     keyed MERGE/DELETE). An index maintained across N drains equals
     the index rebuilt from scratch with the same quantizer
@@ -568,12 +588,11 @@ def stream_maintain_ivfpq(
     from ray_beam_runner_spark.sources import snapshots as snap
 
     app = app_id or f"ivfpq:{_os.path.basename(_os.path.abspath(index_dir))}"
-    # subspace count is a property of the frozen quantizer — derive it
-    # once at stream construction, not once per micro-batch
-    mrow = books.agg(F.max("j")).first()[0]
-    if mrow is None:
+    # the quantizer is frozen: collect it once at stream construction,
+    # not once per micro-batch
+    model = _collect_model(books, coarse)
+    if not model[0]:
         raise ValueError("stream_maintain_ivfpq: empty codebooks")
-    m = int(mrow) + 1
 
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
@@ -596,7 +615,7 @@ def stream_maintain_ivfpq(
             )  # one job for both branch decisions
             if counts.get("insert"):
                 ins = last.filter(F.col("_change") == "insert").select(id_col, vec_col)
-                enc = ivfpq_encode(ins, coarse, books, id_col, vec_col, m=m)
+                enc = _encode_ivfpq(ins, model, id_col, vec_col, None)
                 snap.upsert_snapshot(
                     spark, index_dir, enc, [id_col],
                     txn_app=app, txn_version=batch_id,
@@ -644,7 +663,7 @@ def refit_ivfpq(
     2. COMMIT the new coarse/books tables, then read them back so the
        encode uses exactly the committed quantizer bytes;
     3. RE-ENCODE the whole corpus in ONE partition-parallel pass
-       (:func:`ivfpq_encode` — model-sized broadcast joins, the corpus
+       (:func:`ivfpq_encode` — one kernel pass, the corpus
        never shuffles);
     4. COMMIT the re-encoded index LAST, carrying (a) the parent
        index's txn watermarks so the streaming maintainer's

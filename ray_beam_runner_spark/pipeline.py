@@ -34,8 +34,9 @@ runs as ONE ``mapInPandas`` when something first reads ``.df`` (GBK,
 combine, collect, window_into, a side-input view, a join, a
 multi-output ParDo). That pass decodes each element once, hands plain
 Python objects from step to step and encodes once. Per-PCollection
-element/byte counts of the steps inside it ride marker rows into one
-Observation.
+element counts (exact) and byte counts (sampled per bundle, as the
+reference's SAMPLED_BYTE_SIZE) of the steps inside it ride marker rows
+into one Observation.
 
 Bounded scope (matches the reference's own rejections): default trigger
 only, event-time timers only (ray_fn_runner.py:92-100), no TestStream.
@@ -46,8 +47,10 @@ assumption as the reference's state-actor commit).
 from __future__ import annotations
 
 import inspect
+import math
 import os
 import pickle
+import random
 from collections.abc import Callable, Iterable
 from dataclasses import dataclass
 from functools import partial
@@ -429,30 +432,59 @@ def _tagged_encoder(layout: _Layout, dead_letters: bool) -> Callable:
 
 
 def _value_size(value_t: T.DataType, pickled: bool, keyed: bool) -> Callable | None:
-    """Summed encoded size of a list of output envelopes' values, as
-    ``byte_counts`` reports it: pickle lengths, or the lengths of typed
-    string/binary values; None where no size is reported (other typed
+    """Encoded size of one output envelope's value, as ``byte_counts``
+    reports it: its pickle length, or the length of a typed
+    string/binary value; None where no size is reported (other typed
     values)."""
     if not pickled and not isinstance(value_t, (T.StringType, T.BinaryType)):
         return None
 
-    def total(envs: list) -> int:
-        values = map(_first, envs)
-        if keyed:
-            values = map(itemgetter(1), values)
+    def size(env) -> int:
+        value = env[0][1] if keyed else env[0]
         if pickled:
-            return sum(map(len, map(_dumps, values)))
-        return sum(len(v) for v in values if v is not None)
+            return len(_dumps(value))
+        return 0 if value is None else len(value)
 
-    return total
+    return size
+
+
+_EXACT_SIZES = 10  # outputs per step and bundle whose size is taken exactly
+
+
+class _SizeSampler:
+    """Byte count of one step's outputs in one bundle, sampled as Beam's
+    SAMPLED_BYTE_SIZE does: the first ``_EXACT_SIZES`` outputs are sized
+    exactly; after them the i-th output is sampled with probability
+    about ``_EXACT_SIZES / i`` (geometric skips), and the mean sampled
+    size stands for every output past the exact prefix. The skips come
+    from a fixed-seed generator, so a bundle's count repeats across
+    runs."""
+
+    def __init__(self, size: Callable, seed: int):
+        self.size, self.rng = size, random.Random(seed)
+        self.seen = self.exact = self.sampled = self.n_sampled = 0
+        self.next = _EXACT_SIZES  # index of the next sampled output
+
+    def add(self, envs: list) -> None:
+        first, self.seen = self.seen, self.seen + len(envs)
+        self.exact += sum(map(self.size, envs[: max(0, _EXACT_SIZES - first)]))
+        while self.next < self.seen:
+            self.sampled += self.size(envs[self.next - first])
+            self.n_sampled += 1
+            p = _EXACT_SIZES / (self.next + 1)
+            self.next += 1 + int(math.log(1.0 - self.rng.random()) / math.log(1.0 - p))
+
+    def total(self) -> int:
+        rest = self.seen - min(self.seen, _EXACT_SIZES)
+        return self.exact + (round(self.sampled * rest / self.n_sampled) if rest else 0)
 
 
 class _Step:
     """One element-wise transform of a fused stage. ``process`` maps a list
     of envelopes to the list of its outputs. ``name`` is the output
     PCollection whose element (and, with ``size``, byte) counts the stage
-    reports; None for transforms that report none. ``size`` sums the
-    encoded value sizes of a list of outputs.
+    reports; None for transforms that report none. ``size`` gives the
+    encoded value size of one output (sampled per bundle, _SizeSampler).
 
     The user callable is pickled when the step is built, as Beam's ParDo
     does: driver state that changes after a transform is applied (a loop
@@ -595,6 +627,10 @@ def _run_stage(batches, steps, src, joined, encode, columns, stats):
     for st in reversed(steps):
         st.start_bundle()
     tally = [0] * (2 * len(steps))
+    sizes = [
+        _SizeSampler(st.size, i) if stats and st.name and st.size else None
+        for i, st in enumerate(steps)
+    ]
 
     def push(envs, first, joined_rows=None):
         for i in range(first, len(steps)):
@@ -603,11 +639,10 @@ def _run_stage(batches, steps, src, joined, encode, columns, stats):
         return envs
 
     def count(i, envs):
-        st = steps[i]
-        if stats and st.name is not None:
+        if stats and steps[i].name is not None:
             tally[2 * i] += len(envs)
-            if st.size is not None:
-                tally[2 * i + 1] += st.size(envs)
+            if sizes[i] is not None:
+                sizes[i].add(envs)
 
     def frame(envs):
         pdf = encode(envs)
@@ -628,6 +663,9 @@ def _run_stage(batches, steps, src, joined, encode, columns, stats):
     if tail:
         yield frame(tail)
     if stats:
+        for i, sampler in enumerate(sizes):
+            if sampler is not None:
+                tally[2 * i + 1] = sampler.total()
         yield pd.DataFrame({**{c: [None] for c in columns}, _STATS: [tally]})
     for st in steps:
         st.teardown()
@@ -1435,9 +1473,9 @@ class Pipeline:
     def _observe_stage(self, df: DataFrame, steps: tuple) -> DataFrame:
         """The same counts for the PCollections inside a fused stage, which
         never exist as DataFrames: the stage's kernel counts each step's
-        outputs (and their encoded sizes, the pickle length for opaque
-        values) and emits them on marker rows; one Observation on the
-        stage output sums them per step."""
+        outputs (and estimates their encoded sizes, the pickle length for
+        opaque values, from a per-bundle sample) and emits them on marker
+        rows; one Observation on the stage output sums them per step."""
 
         def total(i):
             return F.coalesce(F.sum(F.col(_STATS)[i]), F.lit(0))

@@ -577,8 +577,8 @@ def q_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     Deterministic init (k smallest ids), argmin ties to the lowest
     cell, 2 (assign, update) rounds + final assignment, centroid means
     rounded to 9 dp so summation order cannot skew the iteration; per
-    round ONE broadcast join + map-side-combinable mean over the
-    corpus. See functions.clustering.kmeans_lloyd."""
+    round ONE vectorized kernel pass over the corpus + a partial-sum
+    reduction. See functions.clustering.kmeans_lloyd."""
     from ray_beam_runner_spark.functions.clustering import kmeans_lloyd
 
     return kmeans_lloyd(t(spark, sf_dir, "embeddings"), "vec_id", "embedding", k=8, n_iter=2)

@@ -42,6 +42,12 @@ _BASE_CONF = {
     # worst against the multi-GB JVMs this engine runs in.
     "spark.sql.codegen.cache.maxEntries": "2000",
     "spark.serializer": "org.apache.spark.serializer.KryoSerializer",
+    # PySpark 4 captures a Python call site on every wrapped Column call
+    # (a stack walk, ~3 extra py4j round trips and a failing
+    # `import IPython` each). Measured with cProfile over 4
+    # upsert_snapshot calls: py4j calls 6,390 -> 1,950. Only error
+    # messages lose the Python call site; the plans are unchanged.
+    "spark.python.sql.dataFrameDebugging.enabled": "false",
     # Parquet TIMESTAMP(NANOS) (e.g. events.ts) reads as LongType;
     # read_parquet_normalized() converts to TimestampType (µs, truncating —
     # same as the DuckDB oracle's ns→µs cast).

@@ -50,7 +50,8 @@ def run_to_memory(
 
     ``on_batch(df, batch_id)`` is the bundle-finalization analog — called
     after each micro-batch commit (reference execution.py:131-139). Uses
-    foreachBatch when given, else the memory sink directly."""
+    foreachBatch when given, else the memory sink directly, whose view
+    is dropped before returning (the rows stay readable)."""
     name = f"mem_{uuid.uuid4().hex[:12]}"
     spark = agg.sparkSession
     if on_batch is not None:
@@ -87,7 +88,11 @@ def run_to_memory(
         # caller's comparison; stop the leaked query and fail loudly.
         q.stop()
         raise TimeoutError(f"stream drain exceeded {timeout_sec}s")
-    return spark.table(name)
+    # The returned DataFrame holds the analyzed plan, and so the sink's
+    # rows; the view would pin them for the session's life.
+    out = spark.table(name)
+    spark.catalog.dropTempView(name)
+    return out
 
 
 def interval_join_streams(

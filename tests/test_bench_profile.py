@@ -78,3 +78,15 @@ def test_session_conf_checkpoint_manager(master, manager):
     conf = session_conf(master, 8, mine)
     assert conf["spark.sql.streaming.checkpointFileManagerClass"] == "my.Manager"
     assert conf["spark.sql.shuffle.partitions"] == "2"
+
+
+def test_session_conf_disables_dataframe_debugging():
+    # PySpark 4's per-Column call-site capture costs py4j round trips on
+    # every expression a query builds; the engine turns it off, and a
+    # caller's extra_conf still wins
+    from ray_beam_runner_spark.session import session_conf
+
+    key = "spark.python.sql.dataFrameDebugging.enabled"
+    assert session_conf("local[4]", 8)[key] == "false"
+    assert session_conf("spark://cluster:7077", 8)[key] == "false"
+    assert session_conf("local[4]", 8, {key: "true"})[key] == "true"

@@ -1038,3 +1038,25 @@ def test_streaming_dataframe_through_a_fused_chain(p, spark, tmp_path):
     q.awaitTermination()
     assert sorted(r.value for r in spark.table("fused_stream").collect()) == ["A", "B", "C"]
     spark.catalog.dropTempView("fused_stream")
+
+
+def test_fused_byte_counts_are_sampled_and_repeat(spark):
+    # past the first outputs of a step in a bundle, byte counts come from
+    # a fixed-seed sample: element counts stay exact, the byte estimate
+    # is close to the exact sum and identical across runs
+    import pickle
+
+    words = [("w" * (i % 37)) + str(i) for i in range(4000)]
+
+    def run():
+        p = Pipeline(spark)
+        p.create(words).map(str.upper).assert_that([w.upper() for w in words])
+        q = p.metrics.query()
+        name = next(n for n in q["element_counts"] if n.endswith(".out"))
+        return q["element_counts"][name], q["byte_counts"][name]
+
+    exact = sum(len(pickle.dumps(w.upper(), pickle.HIGHEST_PROTOCOL)) for w in words)
+    first, second = run(), run()
+    assert first == second
+    assert first[0] == len(words)
+    assert abs(first[1] - exact) < 0.15 * exact

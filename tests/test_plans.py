@@ -547,18 +547,15 @@ def test_span_removal_plan_no_cartesian_and_partial_agg(spark, sf_dir):
     assert_partial_aggregation(df)
 
 
-def test_kmeans_plan_broadcast_centroids(spark, sf_dir):
-    """Every k-means round joins the corpus against BROADCAST centroids
-    (model-sized) — a shuffle join on the vectors would be the wrong
-    plan at any scale."""
+def test_kmeans_plan_assigns_without_join(spark, sf_dir):
+    """k-means assignment is one vectorized kernel pass over the corpus
+    with the model-sized centroids in its closure: no join of any kind
+    (never a CartesianProduct), and the vectors never shuffle."""
     df = QUERIES["q_kmeans"](spark, sf_dir)
     plan = formatted_plan(df)
-    # the centroid cross join must be the BROADCAST nested-loop form
-    # (model-sized build side), never an unhinted CartesianProduct, and
-    # the vectors must never shuffle for a join
-    assert "CartesianProduct" not in plan, plan[:3000]
-    assert "BroadcastNestedLoopJoin" in plan, plan[:3000]
-    assert "SortMergeJoin" not in plan, plan[:3000]
+    assert "MapInArrow" in plan, plan[:3000]
+    for op in ("CartesianProduct", "BroadcastNestedLoopJoin", "SortMergeJoin", "Exchange"):
+        assert op not in plan, plan[:3000]
 
 
 def test_dedup_phash_banded_no_cartesian(spark, sf_dir):

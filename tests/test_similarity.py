@@ -407,6 +407,129 @@ def test_pq_error_paths(spark):
         pq_encode(bad, books, "vec_id", "embedding")
 
 
+def _py_lloyd_exact(vecs: dict, k: int, n_iter: int):
+    """Pure-Python Lloyd with the engine's full ordering contract:
+    squared L2 folded in index order from 0.0, ties to the lowest cell,
+    NaN distances above +inf. Returns (centroids, final assignment)."""
+    import math
+
+    cent = {i: list(vecs[vid]) for i, vid in enumerate(sorted(vecs)[:k])}
+
+    def best(e, cents):
+        def key(cell):
+            d = 0.0
+            for x, y in zip(e, cents[cell]):
+                d += (x - y) * (x - y)
+            return (math.isnan(d), 0.0 if math.isnan(d) else d, cell)
+
+        return min(cents, key=key)
+
+    for _ in range(n_iter):
+        assign = {vid: best(e, cent) for vid, e in vecs.items()}
+        cent = {}
+        for cell in sorted(set(assign.values())):
+            members = [vecs[vid] for vid in sorted(vecs) if assign[vid] == cell]
+            cent[cell] = [round(sum(col) / len(members), 9) for col in zip(*members)]
+    return cent, {vid: best(e, cent) for vid, e in vecs.items()}
+
+
+_NAN = float("nan")
+# vids 0-2 seed the cells. Exact ties: [1, 0] is equidistant from seeds
+# [0, 0] and [2, 0]; duplicates: seeds 3 and 4 (and members) repeat
+# vectors, so a seed cell can lose every member; NaN: one component NaN
+# gives NaN distances to every cell, which lose to any number.
+_ADVERSARIAL = {
+    "ties": {0: [0.0, 0.0], 1: [2.0, 0.0], 2: [1.0, 0.0], 3: [1.0, 0.0],
+             4: [3.0, 0.0], 5: [-1.0, 0.0], 6: [1.0, 1.0], 7: [1.0, -1.0]},
+    "duplicates": {0: [1.0, 1.0], 1: [1.0, 1.0], 2: [1.0, 1.0], 3: [4.0, 4.0],
+                   4: [4.0, 4.0], 5: [1.0, 1.0], 6: [2.5, 2.5], 7: [4.0, 4.0]},
+    "nan": {0: [0.0, 0.0], 1: [4.0, 4.0], 2: [_NAN, 1.0], 3: [1.0, 0.5],
+            4: [3.5, 4.0], 5: [0.5, _NAN], 6: [4.0, 3.0], 7: [0.0, 1.0]},
+}
+
+
+def _same(a, b) -> bool:
+    import math
+
+    return len(a) == len(b) and all(
+        x == y or (math.isnan(x) and math.isnan(y)) for x, y in zip(a, b)
+    )
+
+
+@pytest.mark.parametrize("case", sorted(_ADVERSARIAL))
+@pytest.mark.parametrize("k", [3, 20])  # 20 > n: every vector seeds a cell
+def test_lloyd_kernel_parity_on_adversarial_data(spark, case, k):
+    from ray_beam_runner_spark.functions.clustering import kmeans_lloyd, pq_encode, pq_fit
+
+    vecs = _ADVERSARIAL[case]
+    df = spark.createDataFrame(
+        [(vid, e) for vid, e in vecs.items()], "vec_id long, embedding array<double>"
+    ).repartition(3)  # partial sums from several partitions
+    got = {r.vec_id: r.cell for r in kmeans_lloyd(df, "vec_id", "embedding", k=k, n_iter=2).collect()}
+    assert got == _py_lloyd_exact(vecs, k, 2)[1]
+    # PQ: each 1-dim subspace is its own Lloyd run, trained in one pass
+    books = pq_fit(df, "vec_id", "embedding", m=2, k=k, n_iter=2)
+    codes = {r.vec_id: list(r.codes) for r in pq_encode(df, books, "vec_id", "embedding").collect()}
+    fitted = {(r.j, r.cell): list(r.c) for r in books.collect()}
+    want_codes = {vid: [] for vid in vecs}
+    for j in range(2):
+        cent, asg = _py_lloyd_exact({vid: e[j:j + 1] for vid, e in vecs.items()}, k, 2)
+        assert {cell: fitted[(jj, cell)] for jj, cell in fitted if jj == j}.keys() == cent.keys()
+        assert all(_same(fitted[(j, cell)], c) for cell, c in cent.items())
+        for vid in vecs:
+            want_codes[vid].append(asg[vid])
+    assert codes == want_codes
+
+
+def test_lloyd_kernel_empty_and_invalid_input(spark):
+    from ray_beam_runner_spark.functions.clustering import kmeans_lloyd, pq_fit
+
+    schema = "vec_id long, embedding array<double>"
+    out = kmeans_lloyd(spark.createDataFrame([], schema), "vec_id", "embedding", k=3)
+    assert out.collect() == []
+    with pytest.raises(ValueError, match="empty corpus"):
+        pq_fit(spark.createDataFrame([], schema), "vec_id", "embedding", m=2, k=2)
+    bad = {
+        "null vector": [(1, [1.0, 2.0]), (2, None)],
+        "ragged": [(1, [1.0, 2.0]), (2, [1.0, 2.0, 3.0])],
+        "null component": [(1, [1.0, 2.0]), (2, [None, 2.0])],
+    }
+    for rows in bad.values():
+        df = spark.createDataFrame(rows, schema)
+        with pytest.raises(ValueError, match="fixed-dimension"):
+            kmeans_lloyd(df, "vec_id", "embedding", k=2)
+        with pytest.raises(ValueError, match="fixed-dimension"):
+            pq_fit(df, "vec_id", "embedding", m=2, k=2)
+
+
+def test_lloyd_jobs_per_fit(spark):
+    """Spark jobs per fit with AQE off (AQE runs each exchange as its own
+    job). kmeans_lloyd(n_iter=2) + reading its result: 1 validation
+    aggregate, 1 seed read, 1 per round, 1 final assignment = 5 (the
+    SQL rounds it replaced took 7). pq_fit(n_iter=2): the same minus the
+    assignment = 4 (the SQL rounds took 5)."""
+    from ray_beam_runner_spark.functions.clustering import kmeans_lloyd, pq_fit
+
+    df = spark.createDataFrame(
+        [(vid, [float(vid % 5), float(vid % 3), 1.0, 0.5]) for vid in range(40)],
+        "vec_id long, embedding array<double>",
+    )
+    dag = spark.sparkContext._jsc.sc().dagScheduler()  # noqa: SLF001
+
+    def jobs(fn):
+        first = int(dag.nextJobId())
+        fn()
+        return int(dag.nextJobId()) - first
+
+    prev = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        assert jobs(lambda: kmeans_lloyd(df, "vec_id", "embedding", k=4, n_iter=2).collect()) == 5
+        assert jobs(lambda: pq_fit(df, "vec_id", "embedding", m=2, k=4, n_iter=2)) == 4
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", prev)
+
+
 def test_ivfpq_recall_and_probe_semantics(spark):
     # composed IVF-PQ: with well-separated modes, probing ONE cell must
     # still retrieve same-mode neighbors (the coarse quantizer routes

@@ -434,3 +434,22 @@ def test_write_slices_distributed_boundaries_and_order(spark, tmp_path):
     assert len(slices2) == 5
     m4 = os.stat(os.path.join(d, slices2[-1])).st_mtime
     assert m4 > mtimes[-1]
+
+
+def test_run_to_memory_leaves_no_memory_sink_view(spark, sf_dir):
+    # each drain used to leave its mem_* view registered, pinning the
+    # sink's rows for the session's life; results must not change, and
+    # an earlier drain's rows stay readable after later drains
+    from ray_beam_runner_spark.plans.differential import compare
+    from ray_beam_runner_spark.queries import ORACLE, QUERIES
+
+    def mem_views():
+        return {t.name for t in spark.catalog.listTables() if t.name.startswith("mem_")}
+
+    before = mem_views()
+    outs = [QUERIES["q_streaming_window"](spark, sf_dir) for _ in range(3)]
+    assert mem_views() == before
+    rows = [sorted(map(tuple, df.collect())) for df in outs]
+    assert rows[0] and rows[0] == rows[1] == rows[2]
+    ok, msg = compare(outs[0], ORACLE["q_streaming_window"], sf_dir)
+    assert ok, msg
